@@ -32,6 +32,10 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 
+def _log_failure(step: str, name: str, exc: Exception) -> None:
+    print(f"bench: {name}: {step} failed: {exc!r}", file=sys.stderr)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -65,18 +69,20 @@ def main() -> None:
         # "What's wrong" #2 — the likely mechanism behind the recurring
         # driver-vs-local sim_* drift): unpersist every persistent RDD
         # explicitly between queries.
+        # A failed sweep or warm-up is logged to stderr (stdout carries
+        # only the result line) and the timed runs still proceed.
         try:
             spark.catalog.clearCache()
             jrdds = spark.sparkContext._jsc.getPersistentRDDs()
             for jrdd in jrdds.values():
                 jrdd.unpersist(False)
-        except Exception:
-            pass
+        except Exception as exc:
+            _log_failure("cache sweep", name, exc)
         if warm_ok:
             try:
                 spec.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+            except Exception as exc:
+                _log_failure("warm-up", name, exc)
         runs = []
         for _ in range(3):
             start = time.perf_counter()

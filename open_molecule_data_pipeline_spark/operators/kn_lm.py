@@ -1,28 +1,28 @@
-"""Kneser-Ney bigram LM + perplexity filter (r13, VERDICT r12 #3):
-CCNet/RedPajama filter corpora on a SMOOTHED n-gram LM, not a unigram —
-this closes the fidelity gap at the same plan shape as
-``text_unigram_ppl_filter`` (unigram_lm.py).
+"""Kneser-Ney n-gram LMs + CCNet perplexity filters (orders 2..5).
 
-Model (interpolated Kneser-Ney with absolute discount D = 0.75):
+CCNet/RedPajama filter corpora on a SMOOTHED n-gram LM, not a unigram
+(``text_unigram_ppl_filter``, unigram_lm.py). The bigram model
+(interpolated Kneser-Ney with absolute discount D = 0.75):
 
     P(w2|w1) = (c(w1,w2) - D) / c(w1)  +  lambda(w1) * P_cont(w2)
     lambda(w1) = D * N1+(w1,*) / c(w1)         (mass freed by discounting)
     P_cont(w2) = N1+(*,w2) / N1+(*,*)          (continuation probability)
 
-where N1+ counts DISTINCT bigram types. Training and scoring share the
+where N1+ counts DISTINCT n-gram types; orders 3..5 add one continuation
+level per order (see ``_kn_ladder_cost``). Training and scoring share the
 corpus (the same self-scoring contract as the unigram filter), so every
-scored bigram is seen: c(w1,w2) >= 1 > D and the max(c-D, 0) branch of
-the textbook formula never activates — documented, and P < 1 strictly,
-so every per-bigram cost is a positive integer after micro-quantization.
+scored n-gram is seen: c >= 1 > D and the max(c-D, 0) branch of the
+textbook formula never activates — P < 1 strictly, so every per-n-gram
+cost is a positive integer after micro-quantization.
+``text_kn_oov_backoff`` scores held-out docs and drives every branch.
 
-Scale design: bigrams are built MAP-SIDE from the split-token array
-(``arrays_zip`` of two slices — zero shuffle, no positional self-join),
-then ONE partial-aggregated groupBy(w1,w2) pass is the corpus-side
-model cost; every other model table (history counts, continuation
-counts, the bigram-type total) derives from the distinct-bigram table,
-which is Heaps-sublinear in corpus size. Scoring is one
-(doc, w1, w2) partial agg joined to the per-bigram cost table — the
-join is NOT hint-broadcast: distinct bigram types at 100 TB outgrow
+Scale design: n-grams are built MAP-SIDE from the split-token array
+(``arrays_zip`` of n slices — zero shuffle, no positional self-join),
+then ONE partial-aggregated groupBy(w1..wn) pass is the corpus-side
+model cost; every other model statistic derives from the distinct-n-gram
+table, which is Heaps-sublinear in corpus size. Scoring is one
+(doc, w1..wn) partial agg joined to the per-n-gram cost table — the
+join is NOT hint-broadcast: distinct n-gram types at 100 TB outgrow
 any broadcast budget, so the plan leaves AQE free to pick broadcast at
 small scale and a plain hash join at large (the one deliberate shape
 difference from the unigram filter's broadcast word-cost table).
@@ -31,8 +31,8 @@ All log-probabilities are micro-quantized int64 (``round(-ln(P)*1e6)``)
 from identical rational inputs on both engines — the unigram-LM /
 naive-bayes precedent; integer sums from there on.
 
-Scoring contract: a document's first token is not scored (no history);
-documents with fewer than two tokens produce no bigrams and are
+Scoring contract: a document's first n-1 tokens are not scored (no full
+history); documents with fewer than n tokens produce no n-grams and are
 excluded. ``mean_nll_micro`` uses truncated division (both engines
 truncate; the numerator is a sum of positives).
 """
@@ -48,7 +48,9 @@ from ._util import spread
 
 _D = 0.75  # absolute discount
 _KN_TOP_MODEL = 20  # bigrams emitted by the model query
-_KN_TOP_DOCS = 15  # docs emitted by the filter (unigram filter's shape)
+_KN_TOP_DOCS = 15  # docs emitted by every per-doc filter (unigram filter's shape)
+_KN3_TOP_DOCS = _KN4_TOP_DOCS = _KN5_TOP_DOCS = _KN_TOP_DOCS  # oracle names
+_GRAM_COUNT = {2: "n_bigrams", 3: "n_trigrams", 4: "n_fourgrams", 5: "n_fivegrams"}
 
 # shared SQL: the bigram stream + model tables (DuckDB side)
 _KN_CTES = """
@@ -117,45 +119,83 @@ LIMIT {_KN_TOP_DOCS}
 """
 
 
-def _bigram_stream(spark, sf_dir):
-    """(doc_id, lang, w1, w2) bigram stream, built map-side from the
+def _words(n):
+    return [f"w{i}" for i in range(1, n + 1)]
+
+
+def _ngram_stream(spark, sf_dir, n):
+    """(doc_id, lang, w1..wn) n-gram stream, built map-side from the
     token array — no shuffle, no positional self-join."""
     d = spread(
         table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
         "doc_id",
     )
+    slices = ", ".join(
+        f"slice(t, {i}, size(t) - {n - 1})" for i in range(1, n + 1)
+    )
     return (
         d.withColumn(
             "t", F.expr("filter(split(text, ' '), x -> length(x) > 0)")
         )
-        .filter(F.size("t") >= 2)
-        .withColumn(
-            "bg",
-            F.expr(
-                "arrays_zip(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1))"
-            ),
-        )
+        .filter(F.size("t") >= n)
+        .select("doc_id", "lang", F.explode(F.expr(f"arrays_zip({slices})")).alias("p"))
         .select(
             "doc_id",
             "lang",
-            F.explode("bg").alias("p"),
-        )
-        .select(
-            "doc_id", "lang", F.col("p.0").alias("w1"), F.col("p.1").alias("w2")
+            *[F.col(f"p.{i}").alias(w) for i, w in enumerate(_words(n))],
         )
     )
+
+
+def _per_doc_nll(grams, cost, n):
+    """(doc_id, lang, n_<grams>, nll_micro, mean_nll_micro): each doc's
+    n-gram occurrences priced by the per-n-gram cost table."""
+    ws = _words(n)
+    n_grams = _GRAM_COUNT[n]
+    return (
+        grams.groupBy("doc_id", "lang", *ws)
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .join(cost.select(*ws, "cost_micro"), ws)
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.sum("c").cast("long").alias(n_grams),
+            F.sum(F.col("c") * F.col("cost_micro"))
+            .cast("long")
+            .alias("nll_micro"),
+        )
+        .withColumn("mean_nll_micro", F.expr(f"nll_micro div {n_grams}"))
+    )
+
+
+def _kn_ppl(spark, sf_dir, n):
+    """Per-doc mean NLL under the order-n KN model, worst docs first."""
+    grams = _ngram_stream(spark, sf_dir, n)
+    cost = _cost_table(grams) if n == 2 else _kn_ladder_cost(spark, grams, n)
+    return (
+        _per_doc_nll(grams, cost, n)
+        .orderBy(F.desc("mean_nll_micro"), "doc_id")
+        .limit(_KN_TOP_DOCS)
+    )
+
+
+def _bigram_tables(bg):
+    """The bigram model tables: big (w1, w2, c12), hist (w1, c1, n1p),
+    cont (w2, npre) and the one-row nb (nbig) — every derived table lives
+    on the distinct-bigram table, Heaps-sublinear."""
+    one = F.count(F.lit(1)).cast("long")
+    big = bg.groupBy("w1", "w2").agg(one.alias("c12"))
+    hist = big.groupBy("w1").agg(
+        F.sum("c12").cast("long").alias("c1"), one.alias("n1p")
+    )
+    cont = big.groupBy("w2").agg(one.alias("npre"))
+    nb = big.agg(one.alias("nbig"))
+    return big, hist, cont, nb
 
 
 def _cost_table(bg):
-    """Per-bigram KN cost table from the bigram stream (all derived
-    tables live on the distinct-bigram table, Heaps-sublinear)."""
-    big = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c12"))
-    hist = big.groupBy("w1").agg(
-        F.sum("c12").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("n1p"),
-    )
-    cont = big.groupBy("w2").agg(F.count(F.lit(1)).cast("long").alias("npre"))
-    nb = big.agg(F.count(F.lit(1)).cast("long").alias("nbig"))
+    """Per-bigram KN cost table, assembled by joins: the held-out query
+    needs the separate tables, so the bigram keeps the join form."""
+    big, hist, cont, nb = _bigram_tables(bg)
     return (
         big.join(hist, "w1")
         .join(cont, "w2")
@@ -182,7 +222,7 @@ def _cost_table(bg):
 def text_kn_bigram_model(spark, sf_dir):
     """Top bigrams under the trained KN model with their count
     decomposition — the inspection view of the trainer."""
-    cost = _cost_table(_bigram_stream(spark, sf_dir))
+    cost = _cost_table(_ngram_stream(spark, sf_dir, 2))
     return (
         cost.select(
             "w1",
@@ -206,32 +246,7 @@ def text_kn_bigram_model(spark, sf_dir):
 def text_kn_bigram_ppl(spark, sf_dir):
     """CCNet-fidelity perplexity filter: per-doc mean NLL under the
     interpolated KN bigram LM; worst (highest-perplexity) docs first."""
-    bg = _bigram_stream(spark, sf_dir)
-    cost = _cost_table(bg).select("w1", "w2", "cost_micro")
-    dbg = bg.groupBy("doc_id", "lang", "w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = (
-        dbg.join(cost, ["w1", "w2"])
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.sum(F.col("c") * F.col("cost_micro"))
-            .cast("long")
-            .alias("nll_micro"),
-        )
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            "lang",
-            "n_bigrams",
-            "nll_micro",
-            F.expr("nll_micro div n_bigrams").alias("mean_nll_micro"),
-        )
-        .orderBy(F.desc("mean_nll_micro"), "doc_id")
-        .limit(_KN_TOP_DOCS)
-    )
+    return _kn_ppl(spark, sf_dir, 2)
 
 
 # --------------------------------------------------------------------------
@@ -326,17 +341,8 @@ def text_kn_oov_backoff(spark, sf_dir):
     """Held-out KN scoring: train on even doc_ids, score odd docs —
     every backoff branch (seen / discount-mass / history-backoff / UNK
     floor) executes and is counted per language."""
-    bg = _bigram_stream(spark, sf_dir)
-    tbg = bg.filter(F.col("doc_id") % 2 == 0)
-    big = tbg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("c12")
-    )
-    hist = big.groupBy("w1").agg(
-        F.sum("c12").cast("long").alias("c1"),
-        F.count(F.lit(1)).cast("long").alias("n1p"),
-    )
-    cont = big.groupBy("w2").agg(F.count(F.lit(1)).cast("long").alias("npre"))
-    nb = big.agg(F.count(F.lit(1)).cast("long").alias("nbig"))
+    bg = _ngram_stream(spark, sf_dir, 2)
+    big, hist, cont, nb = _bigram_tables(bg.filter(F.col("doc_id") % 2 == 0))
     sbg = (
         bg.filter(F.col("doc_id") % 2 == 1)
         .groupBy("lang", "w1", "w2")
@@ -438,20 +444,10 @@ GROUP BY p.lang, bucket
 def text_ccnet_ppl_buckets(spark, sf_dir):
     """Per-language head/middle/tail perplexity terciles with doc/token
     accounting — the CCNet bucket artifact."""
-    bg = _bigram_stream(spark, sf_dir)
-    cost = _cost_table(bg).select("w1", "w2", "cost_micro")
-    dbg = bg.groupBy("doc_id", "lang", "w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = (
-        dbg.join(cost, ["w1", "w2"])
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").cast("long").alias("n_bigrams"),
-            F.expr("sum(c * cost_micro) div sum(c)")
-            .cast("long")
-            .alias("mnll"),
-        )
+    bg = _ngram_stream(spark, sf_dir, 2)
+    # the oracle's mnll = sum(c * cost) div sum(c) = nll_micro div n_bigrams
+    per_doc = _per_doc_nll(bg, _cost_table(bg), 2).withColumnRenamed(
+        "mean_nll_micro", "mnll"
     )
     th = per_doc.groupBy("lang").agg(
         F.expr("percentile(mnll, 0.33)").alias("t33"),
@@ -528,13 +524,11 @@ LIMIT {_MINK_TOP}
 def text_min_k_prob_audit(spark, sf_dir):
     """Min-K% Prob: docs ranked by the mean cost of their 20% highest-
     cost bigrams, ascending — the contamination / membership screen."""
-    from pyspark.sql import Window as W
-
-    bg = _bigram_stream(spark, sf_dir)
+    bg = _ngram_stream(spark, sf_dir, 2)
     cost = _cost_table(bg).select("w1", "w2", "cost_micro")
     occ = bg.join(cost, ["w1", "w2"]).select("doc_id", "lang", "cost_micro")
-    wn = W.partitionBy("doc_id")
-    wr = W.partitionBy("doc_id").orderBy(F.desc("cost_micro"))
+    wn = Window.partitionBy("doc_id")
+    wr = Window.partitionBy("doc_id").orderBy(F.desc("cost_micro"))
     sized = occ.select(
         "doc_id",
         "lang",
@@ -558,31 +552,23 @@ def text_min_k_prob_audit(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# TRIGRAM Kneser-Ney perplexity filter (r13): the full CCNet shape — the
-# production filters run order-3+ smoothed LMs, where the bigram above
-# is the fidelity floor. Interpolated KN with the proper backoff chain:
+# Order-n interpolated Kneser-Ney perplexity filters, n = 3..5 (the
+# CCNet/KenLM orders; 5 is KenLM's default). Each order adds one
+# continuation level to the bigram chain:
 #
-#   P(w3|w1 w2) = (c123 - D)/c12 + D * N1+(w1 w2 *)/c12 * Pbo(w3|w2)
-#   Pbo(w3|w2)  = (N1+(* w2 w3) - D)/N1+(* w2 *)
-#                 + D * N1+(w2 *)/N1+(* w2 *) * Pcont(w3)
-#   Pcont(w3)   = N1+(* w3)/N1+(* *)          (over (w2,w3) bigram TYPES)
+#   P_1(wn|w1..w_{n-1}) = (c(w1..wn) - D)/c(w1..w_{n-1} .)
+#                         + D * N1+(w1..w_{n-1} .)/c(w1..w_{n-1} .) * P_2
+#   P_j(wn|wj..w_{n-1}) = (N1+(. wj..wn) - D)/N1+(. wj..w_{n-1} .)
+#                         + D * N1+(wj..w_{n-1} .)/N1+(. wj..w_{n-1} .)
+#                           * P_{j+1}                        (2 <= j < n)
+#   P_n(wn)             = N1+(. wn) / |distinct (w_{n-1}, wn) types|
 #
-# where the MIDDLE level counts CONTINUATIONS (distinct-w1 types), not
-# raw frequencies — the defining KN property, now exercised at two
-# levels. Self-scoring (train = score corpus) keeps every max(x-D, 0)
-# branch inactive: c123 >= 1 > D at the top and N1+(* w2 w3) >= 1 > D in
-# the middle, so every probability is strictly in (0, 1) and every cost
-# a positive integer after micro-quantization (the bigram precedent).
-#
-# Scale: the trigram stream is built MAP-SIDE (arrays_zip of three
-# slices); ONE groupBy(w1,w2,w3) pass is the corpus-side cost; every
-# model table (c12/N1+(w1w2*), continuation tables, bigram types) lives
-# on the distinct-trigram table — Heaps-sublinear. The scoring join is
-# un-hinted (AQE broadcasts at small scale; trigram types outgrow any
-# broadcast budget at 100 TB).
+# where the lower levels count CONTINUATIONS (distinct left-extension
+# types), not raw frequencies — the defining KN property. Self-scoring
+# keeps every max(x-D, 0) branch inactive (c >= 1 > D at the top,
+# N1+ >= 1 > D below), so every probability is strictly in (0, 1) and
+# every cost a positive integer after micro-quantization.
 # --------------------------------------------------------------------------
-
-_KN3_TOP_DOCS = 15
 
 _KN3_CTES = """
 lf3 AS (
@@ -654,146 +640,6 @@ FROM per_doc
 ORDER BY mean_nll_micro DESC, doc_id
 LIMIT {_KN3_TOP_DOCS}
 """
-
-
-def _trigram_stream(spark, sf_dir):
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-        "doc_id",
-    )
-    return (
-        d.withColumn(
-            "t", F.expr("filter(split(text, ' '), x -> length(x) > 0)")
-        )
-        .filter(F.size("t") >= 3)
-        .withColumn(
-            "tg",
-            F.expr(
-                "arrays_zip(slice(t, 1, size(t) - 2),"
-                " slice(t, 2, size(t) - 2), slice(t, 3, size(t) - 2))"
-            ),
-        )
-        .select("doc_id", "lang", F.explode("tg").alias("p"))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-            F.col("p.2").alias("w3"),
-        )
-    )
-
-
-@register(
-    "text_kn_trigram_ppl",
-    oracle=_KN3_PPL_ORACLE,
-    tags=("text", "training"),
-)
-def text_kn_trigram_ppl(spark, sf_dir):
-    """Per-doc mean NLL under the interpolated trigram KN model (two
-    continuation levels), worst docs first — the order-3 CCNet filter."""
-    tg = _trigram_stream(spark, sf_dir)
-    # r17: same w2-clustered window-ladder restructure as the 4/5-gram
-    # filters (one exchange serves every w2-containing level; unordered
-    # siblings share the row_number sorts via explicit unbounded
-    # frames). Identical integer stats, untouched cost formula.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    tri = (
-        tg.repartition(width, "w2")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).cast("long").alias("c123"))
-    )
-    w12 = Window.partitionBy("w2", "w1")
-    w23 = Window.partitionBy("w2", "w3")
-    w2 = Window.partitionBy("w2")
-    w3 = Window.partitionBy("w3")
-    one = F.count(F.lit(1))
-    unb = (Window.unboundedPreceding, Window.unboundedFollowing)
-    stats = (
-        # block 1: sorted (w2, w1)
-        tri.withColumn("c12", F.sum("c123").over(w12))
-        .withColumn("n12", one.over(w12))
-        # block 2: sorted (w2, w3, w1)
-        .withColumn(
-            "f23",
-            (F.row_number().over(w23.orderBy("w1")) == 1).cast("long"),
-        )
-        .withColumn("n1p23", one.over(w23.orderBy("w1").rowsBetween(*unb)))
-        .withColumn("ndot2", one.over(w2))
-        .withColumn("nm2", F.sum("f23").over(w2))
-        # the (w3) level is the one key not clustered by w2
-        .repartition(width, "w3")
-        .withColumn("npre3", F.sum("f23").over(w3))
-        .drop("f23")
-    )
-    nbt = (
-        tri.select("w2", "w3")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("nbig"))
-    )
-    pbo = (F.col("n1p23").cast("double") - F.lit(_D)) / F.col("ndot2") + F.lit(
-        _D
-    ) * F.col("nm2") / F.col("ndot2") * F.col("npre3") / F.col("nbig")
-    cost3 = (
-        stats.crossJoin(F.broadcast(nbt))
-        .withColumn(
-            "cost_micro",
-            F.round(
-                -F.log(
-                    (F.col("c123").cast("double") - F.lit(_D)) / F.col("c12")
-                    + F.lit(_D) * F.col("n12") / F.col("c12") * pbo
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-    )
-    dtg = tg.groupBy("doc_id", "lang", "w1", "w2", "w3").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = (
-        dtg.join(cost3.select("w1", "w2", "w3", "cost_micro"), ["w1", "w2", "w3"])
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").cast("long").alias("n_trigrams"),
-            F.sum(F.col("c") * F.col("cost_micro"))
-            .cast("long")
-            .alias("nll_micro"),
-        )
-    )
-    return (
-        per_doc.withColumn(
-            "mean_nll_micro", F.expr("nll_micro div n_trigrams")
-        )
-        .orderBy(F.desc("mean_nll_micro"), "doc_id")
-        .limit(_KN3_TOP_DOCS)
-    )
-
-
-# --------------------------------------------------------------------------
-# 4-gram interpolated Kneser-Ney + perplexity filter (r14, VERDICT r13
-# #3): the CCNet/KenLM-standard higher order. The recursion adds one
-# more continuation level to the trigram chain:
-#
-#   P4(w4|w1w2w3) = (c(1234)-D)/c(123.)  + D*N1+(123,*)/c(123.)  * P3
-#   P3(w4|w2w3)   = (N1+(*,234)-D)/N1+(*,23,*) + D*Nf(23)/N1+(*,23,*) * P2
-#   P2(w4|w3)     = (N1+(*,34)-D)/N1+(*,3,*)  + D*Nf(3)/N1+(*,3,*)  * Pc
-#   Pc(w4)        = N1+(*,4) / |distinct (w3,w4) types|
-#
-# where every N1+ is a TYPE count. Plan shape (the trigram plan extended
-# one level, same scale argument): ONE groupBy(w1..w4) corpus pass builds
-# the count table; every lower-order table (cont234 -> n34 -> bt4) is a
-# re-aggregation of the DISTINCT-4-gram table, so model-side cost is
-# Heaps-sublinear in corpus size; state roughly doubles per order but
-# stays a function of type counts, not token counts. The scoring join is
-# un-hinted (AQE broadcasts at small scale; 4-gram types outgrow any
-# broadcast budget at 100 TB).
-#
-# Self-scoring contract (as the bigram/trigram filters): every scored
-# 4-gram is seen, so c1234 >= 1 > D and each level's first term is
-# strictly positive — P < 1 and cost_micro is a positive int64.
-# --------------------------------------------------------------------------
-
-_KN4_TOP_DOCS = 15
 
 _KN4_CTES = """
 lf4 AS (
@@ -883,173 +729,6 @@ FROM per_doc
 ORDER BY mean_nll_micro DESC, doc_id
 LIMIT {_KN4_TOP_DOCS}
 """
-
-
-def _fourgram_stream(spark, sf_dir):
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-        "doc_id",
-    )
-    return (
-        d.withColumn(
-            "t", F.expr("filter(split(text, ' '), x -> length(x) > 0)")
-        )
-        .filter(F.size("t") >= 4)
-        .withColumn(
-            "fg",
-            F.expr(
-                "arrays_zip(slice(t, 1, size(t) - 3),"
-                " slice(t, 2, size(t) - 3), slice(t, 3, size(t) - 3),"
-                " slice(t, 4, size(t) - 3))"
-            ),
-        )
-        .select("doc_id", "lang", F.explode("fg").alias("p"))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-            F.col("p.2").alias("w3"),
-            F.col("p.3").alias("w4"),
-        )
-    )
-
-
-@register(
-    "text_kn_fourgram_ppl",
-    oracle=_KN4_PPL_ORACLE,
-    tags=("text", "training"),
-)
-def text_kn_fourgram_ppl(spark, sf_dir):
-    """Per-doc mean NLL under the interpolated 4-gram KN model (three
-    continuation levels), worst docs first — the KenLM-order CCNet
-    filter."""
-    fg = _fourgram_stream(spark, sf_dir)
-    # r17: the five-join model-stat assembly becomes the fivegram's
-    # w3-clustered WINDOW ladder (r16 commit 5124c1e pattern, plus the
-    # r17 sort-sharing: every partition-key list is sequenced on the
-    # shared w3/w2 prefix and the unordered siblings reuse the ordered
-    # row_number sorts via explicit unbounded frames) — every stat is a
-    # per-group constant over a nested-suffix key of the distinct
-    # 4-gram table, so the ladder runs in ONE w3-clustered exchange +
-    # one w4 re-exchange instead of re-joining seven derived tables.
-    # Identical integer stats; the cost formula is untouched.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    four = (
-        fg.repartition(width, "w3")
-        .groupBy("w1", "w2", "w3", "w4")
-        .agg(F.count(F.lit(1)).cast("long").alias("c1234"))
-    )
-    w123 = Window.partitionBy("w3", "w2", "w1")
-    w234 = Window.partitionBy("w3", "w2", "w4")
-    w23 = Window.partitionBy("w3", "w2")
-    w34 = Window.partitionBy("w3", "w4")
-    w3 = Window.partitionBy("w3")
-    w4 = Window.partitionBy("w4")
-    one = F.count(F.lit(1))
-    unb = (Window.unboundedPreceding, Window.unboundedFollowing)
-    stats = (
-        # block 1: sorted (w3, w2, w1)
-        four.withColumn("c123", F.sum("c1234").over(w123))
-        .withColumn("n123", one.over(w123))
-        # block 2: sorted (w3, w2, w4, w1)
-        .withColumn(
-            "f234",
-            (F.row_number().over(w234.orderBy("w1")) == 1).cast("long"),
-        )
-        .withColumn(
-            "n1p234", one.over(w234.orderBy("w1").rowsBetween(*unb))
-        )
-        .withColumn("ndot23", one.over(w23))
-        .withColumn("nm23", F.sum("f234").over(w23))
-        # block 3: sorted (w3, w4, w2, w1)
-        .withColumn(
-            "f34",
-            (F.row_number().over(w34.orderBy("w2", "w1")) == 1).cast(
-                "long"
-            ),
-        )
-        .withColumn(
-            "n1p34",
-            F.sum("f234").over(w34.orderBy("w2", "w1").rowsBetween(*unb)),
-        )
-        .withColumn("ndot3", F.sum("f234").over(w3))
-        .withColumn("nm3", F.sum("f34").over(w3))
-        .drop("f234")
-        # the (w4) level is the one key not clustered by w3
-        .repartition(width, "w4")
-        .withColumn("npre4", F.sum("f34").over(w4))
-        .drop("f34")
-    )
-    nbt4 = (
-        four.select("w3", "w4")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("nbig"))
-    )
-    p2 = (F.col("n1p34").cast("double") - F.lit(_D)) / F.col("ndot3") + F.lit(
-        _D
-    ) * F.col("nm3") / F.col("ndot3") * F.col("npre4") / F.col("nbig")
-    p3 = (F.col("n1p234").cast("double") - F.lit(_D)) / F.col(
-        "ndot23"
-    ) + F.lit(_D) * F.col("nm23") / F.col("ndot23") * p2
-    cost4 = (
-        stats.crossJoin(F.broadcast(nbt4))
-        .withColumn(
-            "cost_micro",
-            F.round(
-                -F.log(
-                    (F.col("c1234").cast("double") - F.lit(_D))
-                    / F.col("c123")
-                    + F.lit(_D) * F.col("n123") / F.col("c123") * p3
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-    )
-    dfg = fg.groupBy("doc_id", "lang", "w1", "w2", "w3", "w4").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = (
-        dfg.join(
-            cost4.select("w1", "w2", "w3", "w4", "cost_micro"),
-            ["w1", "w2", "w3", "w4"],
-        )
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").cast("long").alias("n_fourgrams"),
-            F.sum(F.col("c") * F.col("cost_micro"))
-            .cast("long")
-            .alias("nll_micro"),
-        )
-    )
-    return (
-        per_doc.withColumn(
-            "mean_nll_micro", F.expr("nll_micro div n_fourgrams")
-        )
-        .orderBy(F.desc("mean_nll_micro"), "doc_id")
-        .limit(_KN4_TOP_DOCS)
-    )
-
-
-# --------------------------------------------------------------------------
-# 5-gram interpolated Kneser-Ney + perplexity filter (r14b): the full
-# KenLM default order. One more continuation level on the 4-gram chain:
-#
-#   P5(w5|w1..w4) = (c(12345)-D)/c(1234.) + D*N1+(1234,*)/c(1234.) * P4
-#   P4(w5|w2w3w4) = (N1+(*,2345)-D)/N1+(*,234,*)
-#                     + D*Nf(234)/N1+(*,234,*) * P3
-#   P3(w5|w3w4)   = (N1+(*,345)-D)/N1+(*,34,*) + D*Nf(34)/N1+(*,34,*) * P2
-#   P2(w5|w4)     = (N1+(*,45)-D)/N1+(*,4,*)  + D*Nf(4)/N1+(*,4,*)  * Pc
-#   Pc(w5)        = N1+(*,5) / |distinct (w4,w5) types|
-#
-# Same plan as the lower orders, one level deeper: ONE groupBy(w1..w5)
-# corpus pass; every lower-order table re-aggregates the DISTINCT-
-# 5-gram table (cont2345 -> n345 -> n45 -> bt5) — Heaps-sublinear
-# model state; the scoring join stays un-hinted. Self-scoring keeps
-# every level's first term strictly positive (c >= 1 > D).
-# --------------------------------------------------------------------------
-
-_KN5_TOP_DOCS = 15
 
 _KN5_CTES = """
 lf5 AS (
@@ -1161,35 +840,119 @@ LIMIT {_KN5_TOP_DOCS}
 """
 
 
-def _fivegram_stream(spark, sf_dir):
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
-        "doc_id",
+def _kn_ladder_cost(spark, grams, n):
+    """(w1..wn, cost_micro) for the order-n KN model (n = 3..5), every
+    model statistic computed as a window aggregate over the distinct
+    n-gram table.
+
+    - Nested-suffix keys: each statistic is a per-group constant over a
+      suffix key of the n-gram (the history w1..w_{n-1}, the level-j
+      contexts wj..w_{n-1}, the continuations wj..wn), so it attaches as
+      a window aggregate instead of a separately aggregated table joined
+      back — no branch re-executes the scan/split/explode pipeline.
+      "Count of distinct finer groups" is the sum of a first-row flag.
+    - Clustering on the pivot w_{n-1}: every key but (wn) contains
+      w_{n-1}, and hash clustering on a subset key co-locates every
+      superset key, so ONE exchange on w_{n-1} serves the n-gram count
+      and every window level. Parallelism is |vocab(w_{n-1})|; the
+      per-w_{n-1} fan-in is inherent (the innermost context statistics
+      ARE per-w_{n-1}).
+    - Prefix-sequenced sort sharing: a Window requires its child sorted
+      by its partition-key SEQUENCE plus order keys, but partitioning is
+      a SET property. Every key list is sequenced w_{n-1}, w_{n-2}, ...,
+      and each level's ordered row_number spec comes first, so the
+      unordered sibling windows of the level ride its sort (a prefix-
+      compatible ordering passes EnsureRequirements); the level's
+      unbounded-frame count reuses the ordered spec for the same reason.
+      One sort for the history, one per level and one after the wn
+      exchange: n sorts in all.
+    - wn is re-exchanged: (wn) is the one key not containing w_{n-1},
+      so the continuation count npre pays the ladder's second exchange.
+    - The width is pinned: repartition(width, key) is a by-number
+      exchange, which AQE never coalesces. AQE sizes coalesced
+      partitions by bytes, but this stage's cost is per-row sorts and
+      window passes, so a byte-sized coalesce would run the ladder on
+      fewer cores than the session has. Spark rejects a non-integer
+      ``spark.sql.shuffle.partitions`` when it is set, so the read
+      needs no fallback.
+
+    Values are independent of the plan: the partition groups are fixed
+    sets and each row_number's order keys make it deterministic.
+    """
+    ws = _words(n)
+    pivot, last = ws[n - 2], ws[n - 1]
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    one = F.count(F.lit(1))
+    unb = (Window.unboundedPreceding, Window.unboundedFollowing)
+
+    def down(hi, lo):  # w_hi, w_{hi-1}, ..., w_lo
+        return [f"w{i}" for i in range(hi, lo - 1, -1)]
+
+    # level j columns: n1p{j} = count of (w_j..w_n) (raw occurrences at
+    # j = 1, distinct left extensions N1+(. w_j..w_n) below),
+    # ndot{j} = its sum over the context, nm{j} = N1+(context .)
+    counts = (
+        grams.repartition(width, pivot)
+        .groupBy(*ws)
+        .agg(one.cast("long").alias("n1p1"))
     )
-    return (
-        d.withColumn(
-            "t", F.expr("filter(split(text, ' '), x -> length(x) > 0)")
-        )
-        .filter(F.size("t") >= 5)
-        .withColumn(
-            "pg",
-            F.expr(
-                "arrays_zip(slice(t, 1, size(t) - 4),"
-                " slice(t, 2, size(t) - 4), slice(t, 3, size(t) - 4),"
-                " slice(t, 4, size(t) - 4), slice(t, 5, size(t) - 4))"
-            ),
-        )
-        .select("doc_id", "lang", F.explode("pg").alias("p"))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("p.0").alias("w1"),
-            F.col("p.1").alias("w2"),
-            F.col("p.2").alias("w3"),
-            F.col("p.3").alias("w4"),
-            F.col("p.4").alias("w5"),
-        )
+    hist = Window.partitionBy(*down(n - 1, 1))
+    stats = counts.withColumn("ndot1", F.sum("n1p1").over(hist)).withColumn(
+        "nm1", one.over(hist)
     )
+    for j in range(2, n):
+        # f{j} marks one row per distinct (w_j..w_n); the finer columns
+        # are unique within each ordered group
+        first = Window.partitionBy(*down(n - 1, j), last).orderBy(*down(j - 1, 1))
+        ctx = Window.partitionBy(*down(n - 1, j))
+        finer = one if j == 2 else F.sum(f"f{j - 1}")
+        stats = (
+            stats.withColumn(f"f{j}", (F.row_number().over(first) == 1).cast("long"))
+            .withColumn(f"n1p{j}", finer.over(first.rowsBetween(*unb)))
+            .withColumn(f"ndot{j}", finer.over(ctx))
+            .withColumn(f"nm{j}", F.sum(f"f{j}").over(ctx))
+            .drop(f"f{j - 1}")  # no f1: dropping it is a no-op
+        )
+    stats = (
+        stats.repartition(width, last)
+        .withColumn("npre", F.sum(f"f{n - 1}").over(Window.partitionBy(last)))
+        .drop(f"f{n - 1}")
+    )
+    # nbig = |distinct (w_{n-1}, w_n)|: a tiny branch off the shared
+    # counts subtree (ReuseExchange dedups its exchange)
+    nbig = counts.select(pivot, last).distinct().agg(one.cast("long").alias("nbig"))
+    p = None
+    for j in range(n - 1, 0, -1):
+        lam = F.lit(_D) * F.col(f"nm{j}") / F.col(f"ndot{j}")
+        p = (F.col(f"n1p{j}").cast("double") - F.lit(_D)) / F.col(f"ndot{j}") + (
+            lam * F.col("npre") / F.col("nbig") if p is None else lam * p
+        )
+    return stats.crossJoin(F.broadcast(nbig)).select(
+        *ws, F.round(-F.log(p) * 1_000_000).cast("long").alias("cost_micro")
+    )
+
+
+@register(
+    "text_kn_trigram_ppl",
+    oracle=_KN3_PPL_ORACLE,
+    tags=("text", "training"),
+)
+def text_kn_trigram_ppl(spark, sf_dir):
+    """Per-doc mean NLL under the interpolated trigram KN model (two
+    continuation levels), worst docs first — the order-3 CCNet filter."""
+    return _kn_ppl(spark, sf_dir, 3)
+
+
+@register(
+    "text_kn_fourgram_ppl",
+    oracle=_KN4_PPL_ORACLE,
+    tags=("text", "training"),
+)
+def text_kn_fourgram_ppl(spark, sf_dir):
+    """Per-doc mean NLL under the interpolated 4-gram KN model (three
+    continuation levels), worst docs first — the KenLM-order CCNet
+    filter."""
+    return _kn_ppl(spark, sf_dir, 4)
 
 
 @register(
@@ -1204,171 +967,4 @@ def _fivegram_stream(spark, sf_dir):
 def text_kn_fivegram_ppl(spark, sf_dir):
     """Per-doc mean NLL under the interpolated 5-gram KN model (four
     continuation levels), worst docs first — KenLM's default order."""
-    pg = _fivegram_stream(spark, sf_dir)
-    # r16 optimization round (guide §2.4, §7.2): the r15 form built each
-    # of the eight model-stat tables (h1234, cont2345, mid234, n345,
-    # mid34, n45, mid4, cw5) as its own aggregation branch and attached
-    # them with eight broadcast joins — every broadcast BUILD re-executed
-    # the scan→split→explode→five pipeline (88 Exchange nodes, ~55 s of
-    # concurrent in-job CPU at sf0.1 for a 5.9 s wall). Every one of
-    # those tables is a per-group constant over a NESTED-suffix key of
-    # the fivegram, so they all attach as window aggregates over ONE
-    # linear pass chain instead: each pass repartitions by the COARSEST
-    # key of its level, which also satisfies the finer windows of the
-    # same pass (hash clustering on a subset key co-locates the superset
-    # key), and "count of distinct finer groups" becomes sum of a
-    # first-row flag. Integer stats are byte-identical to the join form;
-    # the cost formula below is untouched.
-    # every grouping/window key below except (w5) CONTAINS w4, so one
-    # exchange clustered on w4 serves the five aggregation AND all four
-    # window levels (hash clustering on a subset key co-locates every
-    # superset key); parallelism = |vocab(w4)|, and the per-w4 fan-in is
-    # inherent to the algorithm (ndot4/nm4 ARE per-w4 statistics — the
-    # r15 join form aggregated mid4 by w4 too, so no new skew exposure)
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    five = (
-        pg.repartition(width, "w4")
-        .groupBy("w1", "w2", "w3", "w4", "w5")
-        .agg(F.count(F.lit(1)).cast("long").alias("c12345"))
-    )
-    # r17 (guide §2.4, sort elimination): a Window's required child
-    # ordering is its partition-key SEQUENCE + order keys, so every
-    # distinct sequence used to pay its own full-table sort inside the
-    # w4-clustered exchange (9 Sort nodes in the r16 plan). Partitioning
-    # is a SET property — re-sequencing every key list to start with the
-    # shared w4/w3/w2 prefix lets consecutive window blocks reuse one
-    # sort (prefix-compatible ordering passes EnsureRequirements), so
-    # the ladder runs 4 sorts instead of 9. Values are untouched: the
-    # partition groups are the same sets, and each row_number's order
-    # keys make it deterministic within its group exactly as before.
-    w1234 = Window.partitionBy("w4", "w3", "w2", "w1")
-    w2345 = Window.partitionBy("w4", "w3", "w2", "w5")
-    w234 = Window.partitionBy("w4", "w3", "w2")
-    w345 = Window.partitionBy("w4", "w3", "w5")
-    w34 = Window.partitionBy("w4", "w3")
-    w45 = Window.partitionBy("w4", "w5")
-    w4 = Window.partitionBy("w4")
-    w5 = Window.partitionBy("w5")
-    one = F.count(F.lit(1))
-    stats = (
-        # levels A-D all ride the single w4-clustered exchange; the four
-        # sort blocks below are ordered so that every coarser window
-        # rides the sort of the finest window of its block.
-        # f2345 / f345 / f45 mark one row per distinct finer group (the
-        # remaining key columns are unique within each partition-ordered
-        # group, so row_number is deterministic).
-        # block 1: sorted (w4, w3, w2, w1)
-        five.withColumn("c1234", F.sum("c12345").over(w1234))
-        .withColumn("n1234", one.over(w1234))
-        # block 2: sorted (w4, w3, w2, w5, w1) — the ordered row_number
-        # spec comes FIRST so the unordered sibling rides its sort
-        .withColumn(
-            "f2345",
-            (F.row_number().over(w2345.orderBy("w1")) == 1).cast("long"),
-        )
-        .withColumn(
-            "n1p2345",
-            one.over(
-                w2345.orderBy("w1").rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-        .withColumn("ndot234", one.over(w234))
-        .withColumn("nm234", F.sum("f2345").over(w234))
-        .withColumn("ndot34", F.sum("f2345").over(w34))
-        # block 3: sorted (w4, w3, w5, w2, w1)
-        .withColumn(
-            "f345",
-            (F.row_number().over(w345.orderBy("w2", "w1")) == 1).cast(
-                "long"
-            ),
-        )
-        .withColumn(
-            "n1p345",
-            F.sum("f2345").over(
-                w345.orderBy("w2", "w1").rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-        .withColumn("nm34", F.sum("f345").over(w34))
-        .withColumn("ndot4", F.sum("f345").over(w4))
-        .drop("f2345")
-        # block 4: sorted (w4, w5, w3, w2, w1)
-        .withColumn(
-            "f45",
-            (F.row_number().over(w45.orderBy("w3", "w2", "w1")) == 1).cast(
-                "long"
-            ),
-        )
-        .withColumn(
-            "n1p45",
-            F.sum("f345").over(
-                w45.orderBy("w3", "w2", "w1").rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-        .withColumn("nm4", F.sum("f45").over(w4))
-        .drop("f345")
-        # the (w5) level is the one key not clustered by w4
-        .repartition(width, "w5")
-        .withColumn("npre5", F.sum("f45").over(w5))
-        .drop("f45")
-    )
-    # nbig = |distinct (w4, w5)| — a tiny branch off the shared five
-    # subtree (ReuseExchange dedups the repartition exchange), cheaper
-    # than a single-partition global window over the stream
-    nbt5 = (
-        five.select("w4", "w5")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("nbig"))
-    )
-    pc = F.col("npre5") / F.col("nbig")
-    p2 = (F.col("n1p45").cast("double") - F.lit(_D)) / F.col("ndot4") + F.lit(
-        _D
-    ) * F.col("nm4") / F.col("ndot4") * pc
-    p3 = (F.col("n1p345").cast("double") - F.lit(_D)) / F.col(
-        "ndot34"
-    ) + F.lit(_D) * F.col("nm34") / F.col("ndot34") * p2
-    p4 = (F.col("n1p2345").cast("double") - F.lit(_D)) / F.col(
-        "ndot234"
-    ) + F.lit(_D) * F.col("nm234") / F.col("ndot234") * p3
-    cost5 = (
-        stats.crossJoin(F.broadcast(nbt5))
-        .withColumn(
-            "cost_micro",
-            F.round(
-                -F.log(
-                    (F.col("c12345").cast("double") - F.lit(_D))
-                    / F.col("c1234")
-                    + F.lit(_D) * F.col("n1234") / F.col("c1234") * p4
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-    )
-    dpg = pg.groupBy("doc_id", "lang", "w1", "w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    per_doc = (
-        dpg.join(
-            cost5.select("w1", "w2", "w3", "w4", "w5", "cost_micro"),
-            ["w1", "w2", "w3", "w4", "w5"],
-        )
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("c").cast("long").alias("n_fivegrams"),
-            F.sum(F.col("c") * F.col("cost_micro"))
-            .cast("long")
-            .alias("nll_micro"),
-        )
-    )
-    return (
-        per_doc.withColumn(
-            "mean_nll_micro", F.expr("nll_micro div n_fivegrams")
-        )
-        .orderBy(F.desc("mean_nll_micro"), "doc_id")
-        .limit(_KN5_TOP_DOCS)
-    )
+    return _kn_ppl(spark, sf_dir, 5)

@@ -840,21 +840,22 @@ def ml_kmeans_lloyd_3iter(spark, sf_dir):
     )
     spread(qdf).createOrReplaceTempView("km_q")
     # seed centroids: the first k vectors, one pushed-down point lookup
-    # (the CTE's k*d scalar subqueries, same NULL-when-absent semantics)
-    seeds = {
-        r["vec_id"]: r
-        for r in spark.sql(f"SELECT * FROM km_q WHERE vec_id < {k}").collect()  # bounded-collect: <= k seed rows by construction
-    }
+    # (the CTE's k*d scalar subqueries, same NULL-when-absent semantics;
+    # a duplicated seed id has no single row to pick, so it is an error)
+    seeds: dict = {}
+    for r in spark.sql(f"SELECT * FROM km_q WHERE vec_id < {k}").collect():  # bounded-collect: k seed rows unless vec_id repeats, which raises below
+        if r["vec_id"] in seeds:
+            raise ValueError(
+                f"ml_kmeans_lloyd_3iter: seed vec_id {r['vec_id']} is not unique"
+            )
+        seeds[r["vec_id"]] = r
     sv: dict[tuple[int, int], str] = {}
     cv: dict[int, str] = {}
     for j in range(k):
         r = seeds.get(j)
         for i in range(d):
-            sv[(j, i)] = (
-                str(int(r[f"x{i}"]))
-                if r is not None
-                else "cast(NULL AS BIGINT)"
-            )
+            x = None if r is None else r[f"x{i}"]
+            sv[(j, i)] = "cast(NULL AS BIGINT)" if x is None else str(int(x))
         cv[j] = "cast(1 AS BIGINT)"
 
     def dist_lit(j: int) -> str:
@@ -896,14 +897,18 @@ def ml_kmeans_lloyd_3iter(spark, sf_dir):
             f" (SELECT x0, x1, x2, x3, {dists} FROM km_q) a) g"
         ).collect()[0]  # bounded-collect: one global-aggregate row (k*d sums + k counts + inertia)
         for j in range(k):
+            # an empty cluster's centroid is s/0, which the oracle engine
+            # evaluates to NULL and ANSI Spark rejects: pass NULL sums so
+            # the division yields NULL here too
+            n_j = int(m[f"c{j}"])
             for i in range(d):
                 s = m[f"s{j}_{i}"]
                 sv[(j, i)] = (
                     f"cast('{s}' AS DECIMAL(38,0))"
-                    if s is not None
+                    if s is not None and n_j
                     else "cast(NULL AS DECIMAL(38,0))"
                 )
-            cv[j] = f"cast({int(m[f'c{j}'])} AS BIGINT)"
+            cv[j] = f"cast({n_j} AS BIGINT)"
         in6_lit.append(
             f"cast('{m['in6']}' AS DECIMAL(38,0))"
             if m["in6"] is not None

@@ -33,13 +33,23 @@ class SourceSummary:
     extra: dict = field(default_factory=dict)
 
 
+def _hidden(p: Path, root: Path) -> bool:
+    """Hadoop's hidden-file rule, which Spark's readers apply: a name
+    starting with ``.`` or ``_`` (``.part-*.crc`` checksums, ``_SUCCESS``,
+    ``_temporary/``) is not data."""
+    return any(part[:1] in (".", "_") for part in p.relative_to(root).parts)
+
+
 def summarize_directory(path: str | Path, patterns: tuple[str, ...] = ("*",)) -> DirectorySummary:
-    """Recursive file count + byte sum (reference ``runner.py:264-298``)."""
+    """Recursive count + byte sum of the visible files (reference
+    ``runner.py:264-298``)."""
     root = Path(path)
     files: set[Path] = set()
     if root.exists():
         for pattern in patterns:
-            files.update(p for p in root.rglob(pattern) if p.is_file())
+            files.update(
+                p for p in root.rglob(pattern) if p.is_file() and not _hidden(p, root)
+            )
     return DirectorySummary(
         directory=str(root),
         file_count=len(files),

@@ -1,11 +1,11 @@
-"""Dump .explain("formatted") for headline (bench) queries to plans/r17/.
+"""Dump .explain("formatted") for headline (bench) queries to plans/<round>/.
 
 Usage:
-  python scripts/dump_explain_r17.py before            # all bench queries
-  python scripts/dump_explain_r17.py after name1 name2 # just the named ones
+  python scripts/dump_explain.py r18 before            # all bench queries
+  python scripts/dump_explain.py r18 after name1 name2 # just the named ones
 
-Writes plans/r17/<query>_<tag>.txt — the optimization-round evidence files
-the judge checks plan claims against (OPTIMIZATION_r17.md).
+Writes plans/<round>/<query>_<tag>.txt — the before/after plan evidence
+an optimization round's write-up checks its plan claims against.
 """
 
 from __future__ import annotations
@@ -20,8 +20,10 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print(__doc__)
+        return 2
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
     from open_molecule_data_pipeline_spark.registry import load_all
     from open_molecule_data_pipeline_spark.session import get_spark
@@ -32,7 +34,7 @@ def main() -> int:
     if not names:
         names = sorted(n for n, s in specs.items() if s.bench)
 
-    out_dir = REPO / "plans" / "r17"
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         spec = specs[name]

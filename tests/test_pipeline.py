@@ -108,6 +108,15 @@ def test_parse_mode_end_to_end(spark, job_config):
     ckpt = CheckpointManager(Path(cfg.checkpoint_dir) / "ingestion-parse")
     assert ckpt.is_completed("pubchem") and ckpt.is_completed("zinc")
 
+    # one batch per part file; Spark's hidden .crc checksums are not batches
+    for name in ("pubchem", "zinc"):
+        parts = sorted((Path(cfg.output_dir) / name).glob("part-*"))
+        assert by_name[name].total_batches == len(parts), name
+        assert ckpt.load(name).batch_index == len(parts), name
+        assert by_name[name].output.total_bytes == sum(
+            p.stat().st_size for p in parts
+        ), name
+
     # report rendered with the summary table
     report = (Path(cfg.output_dir) / "raw-data-report.md").read_text()
     assert "| pubchem | sdf | yes |" in report
@@ -121,6 +130,20 @@ def test_parse_mode_end_to_end(spark, job_config):
         "zinc": True,
     }
     assert {f: f.stat().st_mtime_ns for f in files} == mtimes
+
+
+def test_summarize_directory_skips_hidden_files(spark, tmp_path):
+    """Spark writes a hidden ``.part-*.crc`` checksum beside every part
+    file; the batch and byte counts cover only the ``part-*`` files."""
+    from open_molecule_data_pipeline_spark.sinks.ndjson import write_ndjson
+    from open_molecule_data_pipeline_spark.sinks.report import summarize_directory
+
+    write_ndjson(spark.range(5).toDF("id").coalesce(1), str(tmp_path), batch_size=2)
+    parts = sorted(tmp_path.glob("part-*"))
+    assert list(tmp_path.glob(".part-*.crc")), "expected Spark checksum files"
+    got = summarize_directory(tmp_path, ("*.json*",))
+    assert got.file_count == len(parts) == 3
+    assert got.total_bytes == sum(p.stat().st_size for p in parts)
 
 
 # Deliberately an INDEPENDENT copy of the ChEMBL record format (not

@@ -504,6 +504,28 @@ def test_attribution_single_window_no_join(spark, sf_dir):
         assert op not in plan, op
 
 
+def test_kn_ladder_plan_shape(spark, sf_dir):
+    """The shared order-n KN window ladder keeps its exchange and sort
+    budget: one exchange on the pivot word w_{n-1}, one on w_n, and the
+    window levels sharing sorts through prefix-sequenced keys — at most
+    8 Exchange and n Sort operators at every order."""
+    import re
+    from collections import Counter
+
+    for n, name in (
+        (3, "text_kn_trigram_ppl"),
+        (4, "text_kn_fourgram_ppl"),
+        (5, "text_kn_fivegram_ppl"),
+    ):
+        ops = Counter(
+            m.group(1)
+            for line in _plan(spark, sf_dir, name).splitlines()
+            if (m := re.match(r"[\s:|+\-]*(\w+)", line))
+        )
+        assert ops["Exchange"] <= 8, (name, ops)
+        assert ops["Sort"] <= n, (name, ops)
+
+
 def test_irls_moment_passes_partial_agg(spark, sf_dir):
     """Each IRLS round is a map-side-combinable aggregation: every
     HashAggregate must come in partial+final pairs and no join beyond the

@@ -385,3 +385,73 @@ def test_ndjson_pyds_sink_requires_path(spark):
     with _pytest.raises(Exception) as ei:
         df.write.format("omdp_ndjson").mode("append").save()
     assert "path" in str(ei.value)
+
+
+def _write_embeddings(td, rows):
+    """A single-file embeddings table both engines read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array(
+                    [r[1] for r in rows], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(rows), pa.int32()),
+            }
+        ),
+        f"{td}/embeddings.parquet",
+    )
+
+
+def test_kmeans_null_seed_coordinate_matches_oracle(spark, tmp_path):
+    """A NULL coordinate in a seed vector seeds a NULL centroid (the
+    oracle's scalar subquery yields NULL), every argmin comparison with
+    it is NULL, so no row is assigned and later centroids divide by an
+    empty count — both engines must agree instead of raising."""
+    import duckdb
+
+    from open_molecule_data_pipeline_spark.operators.ml_extra import (
+        _KMEANS_FULL_ORACLE,
+        ml_kmeans_lloyd_3iter,
+    )
+
+    from ._compare import canon
+
+    _write_embeddings(
+        tmp_path,
+        [
+            (v, [float(v % 3), float(v // 3), 0.5, None if v == 1 else 1.0])
+            for v in range(10)
+        ],
+    )
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM"
+            f" '{tmp_path}/embeddings.parquet'"
+        )
+        want = con.execute(_KMEANS_FULL_ORACLE).df()
+    finally:
+        con.close()
+    got = ml_kmeans_lloyd_3iter(spark, str(tmp_path)).toPandas()
+    assert canon(got) == canon(want)
+    assert list(got.sort_values("iter")["iter"]) == [1, 2, 3]
+
+
+def test_kmeans_duplicate_seed_id_raises(spark, tmp_path):
+    """Two rows with the same seed vec_id leave no single seed to pick:
+    the query refuses instead of keeping whichever row came last."""
+    from open_molecule_data_pipeline_spark.operators.ml_extra import (
+        ml_kmeans_lloyd_3iter,
+    )
+
+    _write_embeddings(
+        tmp_path,
+        [(v, [float(v), 0.0, 0.0, 0.0]) for v in range(6)]
+        + [(2, [9.0, 9.0, 9.0, 9.0])],
+    )
+    with pytest.raises(ValueError, match="seed vec_id 2 is not unique"):
+        ml_kmeans_lloyd_3iter(spark, str(tmp_path))
