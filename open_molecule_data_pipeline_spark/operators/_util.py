@@ -113,6 +113,16 @@ def two_pass_global_window(df, order_cols, value_col=None, out_col="__running"):
     )
 
 
+def local_df(spark, rows, schema):
+    """A small driver-side table as a SINGLE-slice DataFrame: the default
+    ``createDataFrame`` parallelizes even 1-row data into
+    defaultParallelism slices, so every job over such a table (a
+    broadcast build, a union branch) ran that many near-empty tasks."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(list(rows), 1), schema=schema
+    )
+
+
 def spread(df, *keys):
     """Repartition a coarsely-partitioned input before per-row-heavy compute.
 

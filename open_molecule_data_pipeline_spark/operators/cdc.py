@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ._util import local_df
 
 # The "updates" feed is derived deterministically from the data itself so
 # the operator is oracle-checkable: every customer with custkey % 10 == 0
@@ -39,8 +40,6 @@ SELECT c_custkey, c_name, c_acctbal, is_updated FROM (
 
 @register("cdc_merge_upsert", oracle=_CDC_ORACLE, tags=("cdc", "merge"))
 def cdc_merge_upsert(spark, sf_dir):
-    from .louvain import _local_df
-
     current = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.round("c_acctbal", 2).alias("c_acctbal")
     )
@@ -52,9 +51,7 @@ def cdc_merge_upsert(spark, sf_dir):
             F.round(F.col("c_acctbal") + 1000.0, 2).alias("c_acctbal"),
         )
         .unionByName(
-            # single-slice local row (the louvain _local_df finding:
-            # default createDataFrame fans one row into 32 empty tasks)
-            _local_df(
+            local_df(
                 spark,
                 [(-1, "Customer#new", 0.0)],
                 "c_custkey long, c_name string, c_acctbal double",

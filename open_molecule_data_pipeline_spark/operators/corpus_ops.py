@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
+from ._util import local_df
 
 # --------------------------------------------------------------------------
 # PII redaction. The synthetic documents contain no PII, so the query
@@ -768,8 +769,6 @@ def text_bpe_train_merges(spark, sf_dir):
     sf1) — the per-round rewrite is _bpe_merge_fold with a single-element
     merge set (the K=1 case of the nested-regex equivalence argument).
     Oracle unchanged."""
-    from .louvain import _local_df
-
     d = table(spark, sf_dir, "documents")
     cur = d.repartition(spark.sparkContext.defaultParallelism).select(
         F.split(F.trim(F.col("text")), " ").alias("toks")
@@ -822,7 +821,7 @@ def text_bpe_train_merges(spark, sf_dir):
                 .select(_bpe_merge_fold("toks", "kept").alias("toks"))
                 .localCheckpoint(eager=False)
             )
-    return _local_df(
+    return local_df(
         spark,
         out_rows,
         "round int, tok_a string, tok_b string, freq long",
@@ -994,8 +993,6 @@ def text_bpe_train_batched(spark, sf_dir):
     assignment are pure array expressions instead of triangular joins —
     per sweep: one corpus aggregation, one TakeOrdered(POOL), one 1-row
     map, one broadcast rewrite pass. Oracle unchanged."""
-    from .louvain import _local_df
-
     d = table(spark, sf_dir, "documents")
     # one round-robin shuffle up front: the trainer makes 2 passes per
     # sweep over the same corpus, and the source parquet's split count
@@ -1097,7 +1094,7 @@ def text_bpe_train_batched(spark, sf_dir):
                 .select(_bpe_merge_fold("toks", "kept").alias("toks"))
                 .localCheckpoint(eager=False)
             )
-    return _local_df(
+    return local_df(
         spark,
         out_rows,
         "sweep int, rank long, tok_a string, tok_b string, freq long",

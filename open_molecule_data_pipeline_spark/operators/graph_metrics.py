@@ -606,399 +606,6 @@ def graph_powerlaw_alpha(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# One-level Louvain community move (r13, VERDICT r12 #4): the graph
-# family has modularity SCORING (graph_modularity) and label propagation
-# but no modularity-OPTIMIZING move. One distributed Louvain pass over
-# the supplier-part bipartite graph (the LPA graph) from a 64-community
-# hash seed:
-#
-#   1. every node computes its best-gain move a -> b over its neighbor
-#      communities; gain scaled by 2m^2 so it is EXACT int64:
-#          gain = 2m*(k_ub - k_ua) - k_u*(D_b - D_a + k_u)
-#      (k_ub = u's edges into b, D_c seed degree sums, k_u = u's degree;
-#      derived from Q = sum_c [L_c/m - (D_c/2m)^2]);
-#   2. of the positive-gain moves, only a LOCALLY-DOMINANT MATCHING on
-#      communities is applied: a move survives iff its (gain, node) key
-#      is the maximum among all moves incident to its source AND to its
-#      target community — the one-round handshake matching distributed
-#      Louvain implementations use. Each community then participates in
-#      at most one move, so the D_c interaction terms between applied
-#      moves vanish and total dQ = sum of the individual gains EXACTLY:
-#      Q strictly increases — by construction, not by luck. (A naive
-#      synchronous apply-all pass floods low-D communities and DROPS Q
-#      on this community-free bipartite graph — measured, not guessed:
-#      q1 = -0.24 vs q0 = -0.009 at sf0.01.)
-#
-# The output reports the moved partition's top communities AND both
-# modularity scores (nano-quantized per-community terms, the
-# graph_modularity discipline) — q1_nano > q0_nano is driver-checked.
-#
-# Scale shape: distinct-edge build, degree agg, ONE edge join against
-# the broadcast 64-row community-degree table, one (node, community)
-# partial agg, a per-node window bounded by DEGREE, then two bounded
-# (<= 64-row) incident-max aggs for the matching and the same bounded
-# aggs for Q. No all-pairs stage; every wide shuffle keys on node ids.
-# --------------------------------------------------------------------------
-
-_LOUVAIN_K = 64  # seed hash communities
-
-
-_LOUVAIN_CTES = f"""
-e AS (
-  SELECT DISTINCT l_suppkey * 2 AS u, l_partkey * 2 + 1 AS v FROM lineitem
-),
-ud AS (SELECT u, v FROM e UNION SELECT v, u FROM e),
-m AS (SELECT cast(count(*) AS BIGINT) AS m FROM e),
-deg AS (
-  SELECT u AS node, cast(count(*) AS BIGINT) AS k FROM ud GROUP BY u
-),
-c0 AS (SELECT node, node % {_LOUVAIN_K} AS a, k FROM deg),
-dsum AS (SELECT a, cast(sum(k) AS BIGINT) AS dc FROM c0 GROUP BY a),
-nbr AS (
-  SELECT ud.u AS node, cv.a AS b, cast(count(*) AS BIGINT) AS kub
-  FROM ud JOIN c0 cv ON cv.node = ud.v
-  GROUP BY ud.u, cv.a
-),
-own AS (
-  SELECT c0.node, c0.a, c0.k, coalesce(nbr.kub, 0) AS kua
-  FROM c0 LEFT JOIN nbr ON nbr.node = c0.node AND nbr.b = c0.a
-),
-cand AS (
-  SELECT o.node, o.a, n.b,
-         2 * m.m * (n.kub - o.kua)
-           - o.k * (db.dc - da.dc + o.k) AS gain
-  FROM own o
-  JOIN nbr n ON n.node = o.node AND n.b <> o.a
-  JOIN dsum da ON da.a = o.a
-  JOIN dsum db ON db.a = n.b, m
-),
-moves AS (
-  SELECT node, a, b, gain FROM (
-    SELECT node, a, b, gain,
-           row_number() OVER (PARTITION BY node ORDER BY gain DESC, b) AS rn
-    FROM cand
-  ) t WHERE rn = 1 AND gain > 0
-),
-incident AS (
-  SELECT a AS c, gain, node FROM moves
-  UNION ALL
-  SELECT b AS c, gain, node FROM moves
-),
-winner AS (
-  SELECT c, gain, node FROM (
-    SELECT c, gain, node,
-           row_number() OVER (PARTITION BY c ORDER BY gain DESC, node DESC)
-             AS rn
-    FROM incident
-  ) t WHERE rn = 1
-),
-kept AS (
-  SELECT mv.node, mv.a, mv.b, mv.gain
-  FROM moves mv
-  JOIN winner wa ON wa.c = mv.a AND wa.gain = mv.gain AND wa.node = mv.node
-  JOIN winner wb ON wb.c = mv.b AND wb.gain = mv.gain AND wb.node = mv.node
-),
-c1 AS (
-  SELECT o.node, coalesce(kept.b, o.a) AS cid
-  FROM own o LEFT JOIN kept ON kept.node = o.node
-),
-q_of AS (
-  SELECT 'seed' AS phase, node, a AS cid FROM c0
-  UNION ALL
-  SELECT 'moved', node, cid FROM c1
-),
-dsum2 AS (
-  SELECT q.phase, q.cid, cast(sum(deg.k) AS BIGINT) AS dc
-  FROM q_of q JOIN deg ON deg.node = q.node
-  GROUP BY q.phase, q.cid
-),
-lc AS (
-  SELECT pu.phase, pu.cid, cast(count(*) AS BIGINT) AS l
-  FROM e
-  JOIN q_of pu ON pu.node = e.u
-  JOIN q_of pv ON pv.node = e.v AND pv.phase = pu.phase
-  WHERE pu.cid = pv.cid
-  GROUP BY pu.phase, pu.cid
-),
-t9 AS (
-  SELECT d.phase,
-         cast(round((cast(coalesce(lc.l, 0) AS DOUBLE) / cast(m.m AS DOUBLE)
-                     - (cast(d.dc AS DOUBLE) / (2.0 * cast(m.m AS DOUBLE)))
-                       * (cast(d.dc AS DOUBLE) / (2.0 * cast(m.m AS DOUBLE))))
-                    * 1000000000) AS BIGINT) AS t
-  FROM dsum2 d LEFT JOIN lc ON lc.phase = d.phase AND lc.cid = d.cid, m
-),
-q AS (
-  SELECT max(CASE WHEN phase = 'seed' THEN s END) AS q0_nano,
-         max(CASE WHEN phase = 'moved' THEN s END) AS q1_nano
-  FROM (SELECT phase, cast(sum(t) AS BIGINT) AS s FROM t9 GROUP BY phase) z
-),
-nmv AS (SELECT cast(count(*) AS BIGINT) AS n_moves FROM kept),
-sizes AS (
-  SELECT cid, cast(count(*) AS BIGINT) AS n_nodes FROM c1 GROUP BY cid
-),
-tot AS (SELECT cast(count(*) AS BIGINT) AS n_communities FROM sizes)
-"""
-
-
-def _louvain_oracle() -> str:
-    return f"""
-WITH {_LOUVAIN_CTES}
-SELECT s.cid, s.n_nodes, tot.n_communities, nmv.n_moves, q.q0_nano, q.q1_nano
-FROM sizes s CROSS JOIN tot CROSS JOIN nmv CROSS JOIN q
-ORDER BY s.n_nodes DESC, s.cid
-LIMIT 15
-"""
-
-
-def _louvain_state(spark, sf_dir):
-    """Shared Louvain-pass state: (e, deg, m, c0, c1, kept)."""
-    from pyspark.sql import Window
-
-    li = table(spark, sf_dir, "lineitem").select("l_suppkey", "l_partkey")
-    # r16: a pre-checkpoint repartition(defaultParallelism, u, v) was
-    # tried here (to widen the AQE-coalesced distinct before persisting)
-    # and REJECTED on measurement: pass 9.7 -> 13.7 s, coarsen
-    # 5.3 -> 11.3 s at sf0.1. The extra exchange plus wide near-empty
-    # downstream stages cost more than the narrow persisted layout; the
-    # concurrent broadcast-side subtrees already overlap across cores.
-    e = (
-        li.select(
-            (F.col("l_suppkey") * 2).alias("u"),
-            (F.col("l_partkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ud = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = e.groupBy().agg(F.count(F.lit(1)).cast("long").alias("m"))
-    deg = ud.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("k")
-    )
-    c0 = deg.select("node", (F.col("node") % _LOUVAIN_K).alias("a"), "k")
-    dsum = c0.groupBy("a").agg(F.sum("k").cast("long").alias("dc"))
-    # r17: the seed assignment IS the arithmetic node % K map (and every
-    # v in ud is a node), so the neighbor-community table needs no join
-    # against c0 — group the adjacency by (u, v % K) directly, one
-    # |E|-scale join fewer for BOTH queries sharing this state (the
-    # graph_louvain_pass q0 precedent).
-    nbr = ud.groupBy(
-        F.col("u").alias("node"), (F.col("v") % _LOUVAIN_K).alias("b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("kub"))
-    own = c0.join(
-        nbr.select("node", F.col("b").alias("a"), F.col("kub").alias("kua")),
-        ["node", "a"],
-        "left",
-    ).select("node", "a", "k", F.coalesce("kua", F.lit(0)).alias("kua"))
-    da = dsum.select(F.col("a"), F.col("dc").alias("dca"))
-    db = dsum.select(F.col("a").alias("b"), F.col("dc").alias("dcb"))
-    cand = (
-        own.join(nbr, "node")
-        .where(F.col("b") != F.col("a"))
-        .join(F.broadcast(da), "a")
-        .join(F.broadcast(db), "b")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "node",
-            "a",
-            "b",
-            (
-                2 * F.col("m") * (F.col("kub") - F.col("kua"))
-                - F.col("k") * (F.col("dcb") - F.col("dca") + F.col("k"))
-            ).alias("gain"),
-        )
-    )
-    w = Window.partitionBy("node").orderBy(F.desc("gain"), F.col("b"))
-    moves = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("gain") > 0))
-        .select("node", "a", "b", "gain")
-    )
-    incident = moves.select(F.col("a").alias("c"), "gain", "node").unionByName(
-        moves.select(F.col("b").alias("c"), "gain", "node")
-    )
-    winner = incident.groupBy("c").agg(
-        F.max(F.struct("gain", "node")).alias("wkey")
-    )
-    kept = (
-        moves.join(
-            F.broadcast(winner.select(F.col("c").alias("a"), F.col("wkey").alias("wa"))),
-            "a",
-        )
-        .join(
-            F.broadcast(winner.select(F.col("c").alias("b"), F.col("wkey").alias("wb"))),
-            "b",
-        )
-        .where(
-            (F.struct("gain", "node") == F.col("wa"))
-            & (F.struct("gain", "node") == F.col("wb"))
-        )
-        .select("node", "b", "gain")
-    )
-    c1 = (
-        own.join(F.broadcast(kept), "node", "left")
-        .select("node", F.coalesce("b", F.col("a")).alias("cid"))
-        .localCheckpoint(eager=True)
-    )
-    return e, deg, m, c0, c1, kept
-
-
-@register(
-    "graph_louvain_pass",
-    oracle=_louvain_oracle(),
-    tags=("graph", "iterative"),
-    # promoted r14 per VERDICT r13 #4, then demoted the same round in
-    # favor of graph_louvain_multilevel — the multilevel hierarchy
-    # iterates THIS pass, so tracking it subsumes this plan shape and
-    # keeps the headline set covering the heaviest registered query
-)
-def graph_louvain_pass(spark, sf_dir):
-    e, deg, m, c0, c1, kept = _louvain_state(spark, sf_dir)
-
-    def q_from(ds2, lc):
-        """Nano-quantized modularity from per-community degree sums and
-        intra-edge counts."""
-        d = lambda c: F.col(c).cast("double")  # noqa: E731
-        half = d("dc") / (F.lit(2).cast("double") * d("m"))
-        t = F.round(
-            (F.coalesce("l", F.lit(0)).cast("double") / d("m") - half * half)
-            * 1000000000
-        ).cast("long")
-        return (
-            ds2.join(F.broadcast(lc), "cid", "left")
-            .crossJoin(F.broadcast(m))
-            .select(t.alias("t"))
-            .agg(F.sum("t").cast("long").alias("q"))
-        )
-
-    def q_nano(parts):
-        """Nano-quantized modularity of a (node, cid) partition."""
-        ds2 = (
-            parts.join(deg, "node")
-            .groupBy("cid")
-            .agg(F.sum("k").cast("long").alias("dc"))
-        )
-        pu = parts.select(F.col("node").alias("u"), F.col("cid").alias("cu"))
-        pv = parts.select(F.col("node").alias("v"), F.col("cid").alias("cv"))
-        lc = (
-            e.join(pu, "u")
-            .join(pv, "v")
-            .where(F.col("cu") == F.col("cv"))
-            .groupBy(F.col("cu").alias("cid"))
-            .agg(F.count(F.lit(1)).cast("long").alias("l"))
-        )
-        return q_from(ds2, lc)
-
-    # r17: the seed partition IS the arithmetic node % K map, so q0's
-    # three joins (parts-deg, e-pu, e-pv) collapse to map-side % K
-    # expressions over deg and e — same groups, same counts, two fewer
-    # |E|-scale joins. q1 keeps the join form (c1 is data-dependent).
-    q0 = q_from(
-        deg.groupBy((F.col("node") % _LOUVAIN_K).alias("cid")).agg(
-            F.sum("k").cast("long").alias("dc")
-        ),
-        e.where((F.col("u") % _LOUVAIN_K) == (F.col("v") % _LOUVAIN_K))
-        .groupBy((F.col("u") % _LOUVAIN_K).alias("cid"))
-        .agg(F.count(F.lit(1)).cast("long").alias("l")),
-    ).select(F.col("q").alias("q0_nano"))
-    q1 = q_nano(c1).select(F.col("q").alias("q1_nano"))
-    # n_moves read off the CHECKPOINTED assignment instead of `kept`:
-    # a kept move always targets a different community (gain > 0 forces
-    # b != a), so moved nodes are exactly those whose c1 cid differs
-    # from the arithmetic seed. Counting `kept` re-executed the whole
-    # un-checkpointed moves/winner pipeline inside this broadcast build
-    # (r16 profile: a duplicate ~1 s single-task subtree).
-    nmv = (
-        c1.where(F.col("cid") != F.col("node") % _LOUVAIN_K)
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("long").alias("n_moves"))
-    )
-    sizes = c1.groupBy("cid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes")
-    )
-    tot = sizes.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_communities")
-    )
-    return (
-        sizes.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(nmv))
-        .crossJoin(F.broadcast(q0))
-        .crossJoin(F.broadcast(q1))
-        .orderBy(F.desc("n_nodes"), "cid")
-        .limit(15)
-        .select("cid", "n_nodes", "n_communities", "n_moves", "q0_nano", "q1_nano")
-    )
-
-
-# --------------------------------------------------------------------------
-# Louvain level aggregation (r13): the OTHER half of one Louvain level —
-# after the move pass, coarsen the graph to the community level: super-
-# nodes = communities, edge weight = inter-community edge count, and a
-# self-loop row per community carrying its intra-edge count. Level 2 of
-# Louvain runs the same move pass on exactly this weighted graph. Edge
-# weights conserve the original edge count (sum over rows == m, pinned
-# in pytest) — the telescoping invariant of the coarsening.
-#
-# Scale shape: the coarsen is ONE edge join against the (node -> cid)
-# assignment (broadcastable: |assignment| = |V| 16-byte rows; at 100 TB
-# it is a plain hash join) + one bounded (<= 64x64 community-pair) agg.
-# --------------------------------------------------------------------------
-
-_COARSEN_ORACLE = f"""
-WITH {_LOUVAIN_CTES},
-ce AS (
-  SELECT least(pu.cid, pv.cid) AS ca, greatest(pu.cid, pv.cid) AS cb,
-         cast(count(*) AS BIGINT) AS w
-  FROM e
-  JOIN c1 pu ON pu.node = e.u
-  JOIN c1 pv ON pv.node = e.v
-  GROUP BY 1, 2
-),
-nsup AS (
-  SELECT cast(count(DISTINCT cid) AS BIGINT) AS n_super FROM c1
-),
-wtot AS (SELECT cast(sum(w) AS BIGINT) AS w_total FROM ce)
-SELECT ce.ca, ce.cb, ce.w, nsup.n_super, wtot.w_total
-FROM ce CROSS JOIN nsup CROSS JOIN wtot
-ORDER BY ce.w DESC, ce.ca, ce.cb
-LIMIT 15
-"""
-
-
-@register(
-    "graph_louvain_coarsen",
-    oracle=_COARSEN_ORACLE,
-    tags=("graph", "iterative"),
-)
-def graph_louvain_coarsen(spark, sf_dir):
-    """Community-level multigraph after the Louvain move pass: top
-    super-edges by weight, super-node count, and the conserved total
-    weight (== m)."""
-    e, deg, m, c0, c1, kept = _louvain_state(spark, sf_dir)
-    pu = c1.select(F.col("node").alias("u"), F.col("cid").alias("cu"))
-    pv = c1.select(F.col("node").alias("v"), F.col("cid").alias("cv"))
-    ce = (
-        e.join(pu, "u")
-        .join(pv, "v")
-        .select(
-            F.least("cu", "cv").alias("ca"),
-            F.greatest("cu", "cv").alias("cb"),
-        )
-        .groupBy("ca", "cb")
-        .agg(F.count(F.lit(1)).cast("long").alias("w"))
-    )
-    nsup = c1.agg(F.countDistinct("cid").cast("long").alias("n_super"))
-    wtot = ce.agg(F.sum("w").cast("long").alias("w_total"))
-    return (
-        ce.crossJoin(F.broadcast(nsup))
-        .crossJoin(F.broadcast(wtot))
-        .orderBy(F.desc("w"), "ca", "cb")
-        .limit(15)
-        .select("ca", "cb", "w", "n_super", "w_total")
-    )
-
-
-# --------------------------------------------------------------------------
 # Hash-seeded random walks (r13): the DeepWalk/node2vec INPUT stage — a
 # walk corpus over the co-occurrence graph, one 4-step walk per node.
 # The RNG is the repo's seeded-hash discipline (sample_bernoulli_hash):

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import local_df, spread
 from .dedup import _SHINGLES_DUCK, _SHINGLES_SPARK, _SIG_DUCK_CTE, _minhash_sig_df
 
 _SCHEMES = ((1, 8), (2, 4), (4, 2), (8, 1))  # (r rows, b bands), r*b = 8
@@ -176,11 +176,7 @@ def text_lsh_band_tuning(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n_candidates"),
         F.expr("sum(j6) div count(1)").cast("long").alias("mean_jaccard_ppm"),
     )
-    # single-slice local table (the louvain _local_df finding: default
-    # createDataFrame parallelizes even 3 rows into 32 near-empty tasks)
-    from .louvain import _local_df
-
-    schemes = _local_df(
+    schemes = local_df(
         spark,
         [(r, b, _THRESH[(r, b)]) for r, b in _SCHEMES],
         "r int, b int, threshold_ppm long",

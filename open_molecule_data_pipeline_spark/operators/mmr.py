@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import local_df, spread
 from .similarity import _DOT, N_QUERIES
 
 _R = 10  # candidate pool per query
@@ -126,8 +126,6 @@ def sim_rerank_mmr(spark, sf_dir):
     integer 700/300 scoring; the greedy rounds replayed driver-side over
     the bounded collected candidate/pair-sim integers (see module
     docstring — r16 optimization)."""
-    from pyspark.sql import types as T
-
     e = spread(
         table(spark, sf_dir, "embeddings").select(
             "vec_id",
@@ -181,18 +179,16 @@ def sim_rerank_mmr(spark, sf_dir):
     # corpus twice to fetch 100 vectors), and the bounded sides are
     # broadcast so the scans are never shuffled.
     ids = sorted({nid for lst in pool.values() for nid, _ in lst})
-    pairs = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [
-                (qid, i, j)
-                for qid, lst in sorted(pool.items())
-                for i, _ in lst
-                for j, _ in lst
-                if i != j
-            ],
-            1,  # single slice: bounded table, one task, no empty-slice fan-out
-        ),
-        schema="query_id long, i long, j long",
+    pairs = local_df(
+        spark,
+        [
+            (qid, i, j)
+            for qid, lst in sorted(pool.items())
+            for i, _ in lst
+            for j, _ in lst
+            if i != j
+        ],
+        "query_id long, i long, j long",
     )
     emb = table(spark, sf_dir, "embeddings").where(F.col("vec_id").isin(ids))
     x = emb.select(
@@ -255,16 +251,9 @@ def sim_rerank_mmr(spark, sf_dir):
             out_rows.append((qid, nid, rel, ms, sc, t))
             sel.append(nid)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("rel6", T.LongType()),
-            T.StructField("maxsim6", T.LongType()),
-            T.StructField("mmr_milli", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(out_rows, 1), schema=out_schema
+    return local_df(
+        spark,
+        out_rows,
+        "query_id long, neighbor_id long, rel6 long, maxsim6 long,"
+        " mmr_milli long, rank int",
     )

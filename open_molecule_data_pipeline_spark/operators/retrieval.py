@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import local_df, spread
 
 _TERMS = ("dup", "vector", "key")  # one rare term (high idf), two common
 _K1 = 1.2
@@ -396,11 +396,7 @@ def text_hybrid_rrf_topk(spark, sf_dir):
         F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
     )
     dfreq = hits.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
-    # single-slice local table (the louvain _local_df finding: default
-    # createDataFrame parallelizes a dozen rows into 32 near-empty tasks)
-    from .louvain import _local_df
-
-    qt = _local_df(
+    qt = local_df(
         spark,
         [(q, w) for q, ts in sorted(_RRF_QUERY_TERMS.items()) for w in ts],
         "query_id long, w string",

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import local_df, spread
 
 TOP_PIECES = 32
 
@@ -267,7 +267,6 @@ def text_wordpiece_train(spark, sf_dir):
     single-slice table, per the louvain/mmr driver-replay precedent.
     """
     from .corpus_ops import _bpe_merge_fold, _kept_literal
-    from .louvain import _local_df
 
     d = table(spark, sf_dir, "documents")
     cur = d.repartition(spark.sparkContext.defaultParallelism).select(
@@ -376,7 +375,7 @@ def text_wordpiece_train(spark, sf_dir):
                 .select(_bpe_merge_fold("toks", "kept").alias("toks"))
                 .localCheckpoint(eager=False)
             )
-    return _local_df(
+    return local_df(
         spark,
         out_rows,
         "round int, tok_a string, tok_b string, freq_pair long,"

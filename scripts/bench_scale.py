@@ -141,8 +141,11 @@ def run_once(spark, sf_dir: str, names=None) -> dict[str, float]:
     for name, spec in sorted(specs.items()):
         try:
             spark.catalog.clearCache()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"bench_scale: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         start = time.perf_counter()
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - start, 3)

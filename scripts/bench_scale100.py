@@ -101,8 +101,11 @@ def run_once(spark, sf_dir: str, names) -> dict[str, float]:
     for name in names:
         try:
             spark.catalog.clearCache()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"bench_scale100: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         start = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.format("noop").mode(
             "overwrite"

@@ -46,8 +46,11 @@ def main() -> None:
             jrdds = spark.sparkContext._jsc.getPersistentRDDs()
             for jrdd in jrdds.values():
                 jrdd.unpersist(False)
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"plan_survey_r17: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         t0 = time.perf_counter()
         try:
             df = specs[name].fn(spark, sf_dir)

@@ -57,8 +57,11 @@ def run_profiled(names: list[str] | None, sf_dir: str) -> dict[str, dict]:
     for name in names:
         try:
             spark.catalog.clearCache()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"shuffle_profile: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         sc = spark.sparkContext
         sc.setJobGroup(name, name)
         try:

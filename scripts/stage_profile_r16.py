@@ -55,15 +55,21 @@ def main() -> None:
             jrdds = spark.sparkContext._jsc.getPersistentRDDs()
             for jrdd in jrdds.values():
                 jrdd.unpersist(False)
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"stage_profile_r16: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         # warm-up at sf0.001 (outside the job group) like bench.py
         try:
             specs[name].fn(spark, warm).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"stage_profile_r16: {name}: warm-up failed: {exc!r}",
+                file=sys.stderr,
+            )
         sc = spark.sparkContext
         sc.setJobGroup(name, name)
         t0 = time.time()

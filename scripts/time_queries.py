@@ -53,15 +53,21 @@ def main() -> None:
             jrdds = spark.sparkContext._jsc.getPersistentRDDs()
             for jrdd in jrdds.values():
                 jrdd.unpersist(False)
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"time_queries: {name}: cache sweep failed: {exc!r}",
+                file=sys.stderr,
+            )
         if warm_ok:
             try:
                 spec.fn(spark, warm_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
-            except Exception:
-                pass
+            except Exception as exc:
+                print(
+                    f"time_queries: {name}: warm-up failed: {exc!r}",
+                    file=sys.stderr,
+                )
         best = []
         for _ in range(runs):
             t0 = time.time()

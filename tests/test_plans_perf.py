@@ -526,6 +526,27 @@ def test_kn_ladder_plan_shape(spark, sf_dir):
         assert ops["Sort"] <= n, (name, ops)
 
 
+def test_seeded_louvain_job_budget(spark, sf_dir):
+    """The one-sweep Louvain views run on the seeded core's driver-side
+    community state: a stats job, one job per sweep, a coarsen job and a
+    local output. A per-sweep join pipeline (adjacency x assignment,
+    broadcast community tables, checkpoints) costs ~3x the jobs."""
+    sc = spark.sparkContext
+    for name, budget in (
+        ("graph_louvain_pass", 15),
+        ("graph_louvain_coarsen", 10),
+    ):
+        group = f"job-budget-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            SPECS[name].fn(spark, sf_dir).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= budget, (name, jobs)
+
+
 def test_irls_moment_passes_partial_agg(spark, sf_dir):
     """Each IRLS round is a map-side-combinable aggregation: every
     HashAggregate must come in partial+final pairs and no join beyond the

@@ -285,7 +285,7 @@ def test_louvain_pass_increases_q_on_fixture(spark, sf_dir):
     the supplier-part graph (q1_nano > q0_nano on every output row) and
     applies at least one matched move. (The naive apply-all synchronous
     pass DROPS Q here — the matching is load-bearing.)"""
-    from open_molecule_data_pipeline_spark.operators.graph_metrics import (
+    from open_molecule_data_pipeline_spark.operators.louvain import (
         graph_louvain_pass,
     )
 
@@ -421,13 +421,16 @@ def test_louvain_coarsen_conserves_edges(spark, sf_dir):
     """Coarsening telescopes: total super-edge weight equals the
     original undirected edge count m, and every returned row carries
     the same conserved totals."""
-    from open_molecule_data_pipeline_spark.operators.graph_metrics import (
-        _louvain_state,
+    import pyarrow.parquet as pq
+
+    from open_molecule_data_pipeline_spark.operators.louvain import (
         graph_louvain_coarsen,
     )
 
-    e, *_ = _louvain_state(spark, sf_dir)
-    m = e.count()
+    li = pq.read_table(
+        f"{sf_dir}/lineitem.parquet", columns=["l_suppkey", "l_partkey"]
+    ).to_pandas()
+    m = len(set(zip(li.l_suppkey, li.l_partkey)))
     rows = graph_louvain_coarsen(spark, sf_dir).collect()
     assert rows
     for r in rows:
