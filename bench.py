@@ -7,7 +7,8 @@ Each query is forced end-to-end with the noop sink (computes every output
 column, writes nothing). Per query: one unmeasured warm-up execution at
 sf0.001 (compiles the same whole-stage-codegen classes), then the min of
 3 measured runs at the target scale — steady-state throughput, robust to
-JIT warm-up and machine noise.
+JIT warm-up and machine noise. The steps live in
+``open_molecule_data_pipeline_spark/profile.py``, shared with ``scripts/``.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 # Headline-set cap (VERDICT r10 #6 / r11 #5, policy since r12): at most
@@ -32,63 +32,27 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 
-def _log_failure(step: str, name: str, exc: Exception) -> None:
-    print(f"bench: {name}: {step} failed: {exc!r}", file=sys.stderr)
-
-
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
-
+    from open_molecule_data_pipeline_spark.profile import (
+        SF_DIR,
+        time_query,
+        touch_tables,
+    )
     from open_molecule_data_pipeline_spark.registry import load_all
     from open_molecule_data_pipeline_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
     spark = get_spark(app_name="omdp-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = {n: s for n, s in load_all().items() if s.bench}
-
-    # Warm-up: touch every table once so file listing/footer reads and JVM
-    # JIT don't land in the first measured query.
-    from open_molecule_data_pipeline_spark.catalog import TABLES, table
-
-    for name in TABLES:
-        table(spark, sf_dir, name).write.format("noop").mode("overwrite").save()
-
-    warm_dir = "/root/testdata/sf0.001"
-    warm_ok = Path(warm_dir).exists()
-
-    timings: dict[str, float] = {}
-    for name, spec in sorted(specs.items()):
-        # Session hygiene between queries: drop cached relations left over
-        # from the previous query (persisted subtrees, checkpoint-backed
-        # caches) so its memory pressure doesn't tax this one's timing.
-        # clearCache() alone does NOT free localCheckpoint RDD blocks
-        # (they wait for driver GC + ContextCleaner), so checkpoint-heavy
-        # queries would tax their alphabetical successors (VERDICT r14
-        # "What's wrong" #2 — the likely mechanism behind the recurring
-        # driver-vs-local sim_* drift): unpersist every persistent RDD
-        # explicitly between queries.
-        # A failed sweep or warm-up is logged to stderr (stdout carries
-        # only the result line) and the timed runs still proceed.
-        try:
-            spark.catalog.clearCache()
-            jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jrdds.values():
-                jrdd.unpersist(False)
-        except Exception as exc:
-            _log_failure("cache sweep", name, exc)
-        if warm_ok:
-            try:
-                spec.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception as exc:
-                _log_failure("warm-up", name, exc)
-        runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - start)
-        timings[name] = round(min(runs), 3)
+    touch_tables(spark, sf_dir)
+    timings = {
+        name: round(min(time_query(spark, name, spec.fn, sf_dir, 3, "bench")), 3)
+        for name, spec in sorted(specs.items())
+    }
 
     total = round(sum(timings.values()), 3)
     # Ledger hook (VERDICT r7 #8): when SPARK_GRAFT_LEDGER_LABEL is set,

@@ -1,9 +1,18 @@
-"""10x scale-proof bench: derive an sf1-equivalent dataset from sf0.1 and
-time every headline query once at both scales (VERDICT r4 #4).
+"""Scale-proof bench: derive a dataset of N key-offset copies of sf0.1 and
+time queries at both scales (VERDICT r4 #4).
 
 The plan lints prove the SHAPES are scale-safe; this run proves the
-CONSTANTS: each query's wall-clock ratio at 10x the rows, flagged when it
-exceeds 2.5x the linear expectation (ratio > 25).
+CONSTANTS: each query's wall-clock ratio at N times the rows, flagged when
+it exceeds 2.5x the linear expectation (ratio > 2.5 * N).
+
+- ``10`` (default): derived sf1 in the single-file layout, one parquet
+  FILE per table (the streaming twins' pathGlobFilter matches leaf file
+  names); times every headline query.
+- ``100``: derived sf10 in a multi-part layout (parallel write and a
+  realistic many-file layout at this volume); times ``SUBSET_100``, a
+  representative non-streaming subset (the twins need the single-file
+  glob). Two decades of scaling on the same plans: the difference between
+  "survives 10x" and "credibly 100 TB-shaped".
 
 Derivation (keys offset per copy so every copy is referentially
 self-contained; dims ``region``/``nation`` stay fixed, as in TPC-H):
@@ -13,17 +22,21 @@ self-contained; dims ``region``/``nation`` stay fixed, as in TPC-H):
 - ``documents.text`` for copy k > 0 maps every token t -> t_k: a per-copy
   VOCABULARY BIJECTION. Cross-copy token/shingle sets are disjoint (no LSH
   band can collide across copies), while within-copy Jaccard structure is
-  preserved EXACTLY — so MinHash candidate/pair counts scale exactly 10x.
+  preserved EXACTLY — so MinHash candidate/pair counts scale exactly Nx.
   (A salting variant was tried first: ~25% junk tokens per doc left
   cross-copy Jaccard ~0.8, where the r=2/b=4 band scheme collides with
   p=0.98 — 10-doc hard-negative families and millions of singleton tokens
   in the inverted index; a different workload, not a scale-up.)
 - timestamps/values/embeddings are unchanged: time-range density and
-  vector geometry grow 10x in rows, not in range
+  vector geometry grow Nx in rows, not in range
 
-Usage: python scripts/bench_scale.py [--regen]
-Writes the derived tables to /tmp/omdp_scale_sf1/ (reused if present) and
-prints one JSON line per scale plus a ratio table.
+Timing per query and scale: the shared cache sweep and sf0.001 warm-up,
+then the min of 2 noop-sink runs (single cold runs showed 3x swings on the
+shuffle-heavy queries).
+
+Usage: python scripts/bench_scale.py [10|100] [--regen] [--names a,b,c]
+Writes the derived tables to /tmp/omdp_scale_sf{N/10}/ (reused if present)
+and prints one JSON line per scale plus a ratio table.
 """
 
 from __future__ import annotations
@@ -31,77 +44,89 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import reduce
 from pathlib import Path
 
 REPO_ROOT = str(Path(__file__).resolve().parent.parent)
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SCALE_DIR = "/tmp/omdp_scale_sf1"
-N_COPIES = 10
+from open_molecule_data_pipeline_spark.profile import (  # noqa: E402
+    SF_DIR,
+    time_query,
+    touch_tables,
+)
 
-# key columns to offset, per table: {table: {column: offset_source_table}}
-# (offset_source_table names whose max-key defines the stride, so foreign
-# keys stay consistent with their referenced table's stride)
+BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+
+# key columns to offset, per table: {table: {column: stride column}}. A
+# column that names itself defines a key space (its stride is its max + 1
+# in its own table); a foreign key takes the stride of the key it
+# references, so every copy stays referentially closed.
 KEYED = {
-    "customer": {"c_custkey": "customer"},
-    "orders": {"o_orderkey": "orders", "o_custkey": "customer"},
+    "customer": {"c_custkey": "c_custkey"},
+    "orders": {"o_orderkey": "o_orderkey", "o_custkey": "c_custkey"},
     "lineitem": {
-        "l_orderkey": "orders",
-        "l_partkey": "part",
-        "l_suppkey": "supplier",
+        "l_orderkey": "o_orderkey",
+        "l_partkey": "p_partkey",
+        "l_suppkey": "s_suppkey",
     },
-    "part": {"p_partkey": "part"},
-    "supplier": {"s_suppkey": "supplier"},
-    "events": {"event_id": "events", "user_id": "events_user"},
-    "documents": {"doc_id": "documents"},
-    "embeddings": {"vec_id": "embeddings"},
-}
-KEY_OF = {
-    "customer": "c_custkey",
-    "orders": "o_orderkey",
-    "part": "p_partkey",
-    "supplier": "s_suppkey",
-    "events": "event_id",
-    "documents": "doc_id",
-    "embeddings": "vec_id",
+    "part": {"p_partkey": "p_partkey"},
+    "supplier": {"s_suppkey": "s_suppkey"},
+    "events": {"event_id": "event_id", "user_id": "user_id"},
+    "documents": {"doc_id": "doc_id"},
+    "embeddings": {"vec_id": "vec_id"},
 }
 FIXED = ("region", "nation")
 
+SUBSET_100 = (
+    "agg_pricing_summary",
+    "join_shipping_priority",
+    "join_local_supplier_volume",
+    "window_topk_per_customer",
+    "ts_tumbling_hour",
+    "dedup_exact",
+    "dedup_minhash_lsh_pairs",
+    "text_word_freq_top20",
+    "sim_ivf_topk",
+    "cdc_table_diff",
+)
 
-def generate(spark) -> None:
+
+def scale_dir(copies: int) -> str:
+    return f"/tmp/omdp_scale_sf{copies // 10}"
+
+
+def generate(spark, copies: int) -> None:
     from pyspark.sql import functions as F
 
     from open_molecule_data_pipeline_spark.catalog import table
-
-    strides: dict[str, int] = {}
-    for name, key in KEY_OF.items():
-        strides[name] = (
-            table(spark, BASE_SF, name).agg(F.max(key)).collect()[0][0] + 1
-        )
-    strides["events_user"] = (
-        table(spark, BASE_SF, "events").agg(F.max("user_id")).collect()[0][0]
-        + 1
-    )
-
     from open_molecule_data_pipeline_spark.operators._util import (
         write_single_parquet_file,
     )
 
-    def write_single_file(df, name: str) -> None:
-        # testdata layout = one parquet FILE per table (the streaming
-        # twins' pathGlobFilter matches leaf file names)
-        write_single_parquet_file(df, f"{SCALE_DIR}/{name}.parquet")
+    out_dir = scale_dir(copies)
 
-    Path(SCALE_DIR).mkdir(parents=True, exist_ok=True)
+    def write(df, name: str) -> None:
+        if copies <= 10:
+            write_single_parquet_file(df, f"{out_dir}/{name}.parquet")
+        else:
+            df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+
+    strides = {
+        col: table(spark, BASE_SF, name).agg(F.max(col)).collect()[0][0] + 1
+        for name, keymap in KEYED.items()
+        for col, src in keymap.items()
+        if col == src
+    }
+
+    Path(out_dir).mkdir(parents=True, exist_ok=True)
     for name in FIXED:
-        write_single_file(table(spark, BASE_SF, name), name)
+        write(table(spark, BASE_SF, name), name)
     for name, keymap in KEYED.items():
         base = table(spark, BASE_SF, name)
-        copies = []
-        for k in range(N_COPIES):
+        copies_df = []
+        for k in range(copies):
             c = base
             for col, src in keymap.items():
                 c = c.withColumn(
@@ -120,74 +145,55 @@ def generate(spark) -> None:
                     ),
                 )
                 c = c.withColumn("n_chars", F.length("text").cast("long"))
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        write_single_file(out, name)
-        print(f"  generated {name}: {N_COPIES}x", file=sys.stderr)
-
-
-def run_once(spark, sf_dir: str, names=None) -> dict[str, float]:
-    """Time the headline (bench=True) set, or an explicit name list."""
-    from open_molecule_data_pipeline_spark.registry import load_all
-
-    all_specs = load_all()
-    if names:
-        specs = {n: all_specs[n] for n in names}
-    else:
-        specs = {n: s for n, s in all_specs.items() if s.bench}
-    timings = {}
-    for name, spec in sorted(specs.items()):
-        try:
-            spark.catalog.clearCache()
-        except Exception as exc:
-            print(
-                f"bench_scale: {name}: cache sweep failed: {exc!r}",
-                file=sys.stderr,
-            )
-        start = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.perf_counter() - start, 3)
-    return timings
+            copies_df.append(c)
+        write(reduce(lambda a, b: a.unionByName(b), copies_df), name)
+        print(f"  generated {name}: {copies}x", file=sys.stderr)
 
 
 def main() -> None:
+    from open_molecule_data_pipeline_spark.registry import load_all
     from open_molecule_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="omdp-bench-scale")
+    copies = 10
+    if len(sys.argv) > 1 and sys.argv[1].isdigit():
+        copies = int(sys.argv[1])
+    out_dir = scale_dir(copies)
+    spark = get_spark(app_name=f"omdp-bench-scale{copies}")
     spark.sparkContext.setLogLevel("ERROR")
 
-    if "--regen" in sys.argv or not Path(f"{SCALE_DIR}/lineitem.parquet").exists():
-        print("generating derived sf1 dataset...", file=sys.stderr)
-        generate(spark)
+    if "--regen" in sys.argv or not Path(f"{out_dir}/lineitem.parquet").exists():
+        print(f"generating derived {copies}x dataset...", file=sys.stderr)
+        generate(spark, copies)
 
-    names = None
+    specs = load_all()
     if "--names" in sys.argv:  # comma-separated explicit query list
         names = sys.argv[sys.argv.index("--names") + 1].split(",")
+    elif copies <= 10:
+        names = sorted(n for n, s in specs.items() if s.bench)
+    else:
+        names = list(SUBSET_100)
 
-    # warm pass each (file listing, codegen), then min-of-2 measured —
-    # single cold runs showed 3x swings on the shuffle-heavy queries
-    def min_of_two(sf_dir):
-        a = run_once(spark, sf_dir, names)
-        b = run_once(spark, sf_dir, names)
-        return {k: min(a[k], b[k]) for k in a}
+    def min_of_two(sf_dir: str) -> dict[str, float]:
+        touch_tables(spark, sf_dir)
+        walls = {
+            n: time_query(spark, n, specs[n].fn, sf_dir, 2, "bench_scale")
+            for n in names
+        }
+        return {n: round(min(w), 3) for n, w in walls.items()}
 
-    run_once(spark, BASE_SF, names)  # warm
     base = min_of_two(BASE_SF)
-    run_once(spark, SCALE_DIR, names)  # warm
-    scaled = min_of_two(SCALE_DIR)
+    scaled = min_of_two(out_dir)
 
     print(json.dumps({"sf": 0.1, "queries": base}))
-    print(json.dumps({"sf": 1.0, "queries": scaled, "derived": True}))
-    rows = []
-    for name in sorted(base):
-        r = scaled[name] / max(base[name], 1e-9)
-        flag = " <-- SUPER-LINEAR" if r > 25 else ""
-        rows.append((name, base[name], scaled[name], r, flag))
-        print(f"{name:32s} {base[name]:8.3f}s {scaled[name]:8.3f}s  x{r:5.1f}{flag}")
-    worst = max(rows, key=lambda t: t[3])
-    print(f"worst ratio: {worst[0]} x{worst[3]:.1f}")
+    scaled_sf = round(0.1 * copies, 3)
+    print(json.dumps({"sf": scaled_sf, "queries": scaled, "derived": True}))
+    ratios = {}
+    for name in names:
+        r = ratios[name] = scaled[name] / max(base[name], 1e-9)
+        flag = " <-- SUPER-LINEAR" if r > 2.5 * copies else ""
+        print(f"{name:32s} {base[name]:8.3f}s {scaled[name]:8.3f}s  x{r:6.1f}{flag}")
+    worst = max(ratios, key=ratios.get)
+    print(f"worst ratio: {worst} x{ratios[worst]:.1f} (linear expectation x{copies})")
     spark.stop()
 
 

@@ -42,7 +42,10 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-SCALE_DIR = "/tmp/omdp_scale_sf1"
+from bench_scale import generate, scale_dir  # noqa: E402
+
+SCALE_DIR = scale_dir(10)
+
 SKEW_DIR = "/tmp/omdp_skew_fact"
 HOT_KEY = 7
 N_SALTS = 16
@@ -134,10 +137,8 @@ def main() -> None:
     spark = get_spark(app_name="omdp-bench-skew")
     spark.sparkContext.setLogLevel("ERROR")
     if not Path(f"{SCALE_DIR}/lineitem.parquet").exists():
-        from bench_scale import generate
-
         print("generating derived sf1 dataset...", file=sys.stderr)
-        generate(spark)
+        generate(spark, 10)
     build_fact(spark, hot_share)
 
     # force shuffle joins: the scenario is a dim too big to broadcast

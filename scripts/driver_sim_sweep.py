@@ -53,11 +53,12 @@ def main() -> int:
     names = list(qs)[start : start + count]
     done = set()
     if out.exists():
-        for line in out.read_text().splitlines():
+        for lineno, line in enumerate(out.read_text().splitlines(), 1):
             try:
                 done.add(json.loads(line)["name"])
-            except Exception:
-                pass
+            except (ValueError, KeyError, TypeError) as exc:
+                print(f"{out}:{lineno}: malformed result line: {exc!r}",
+                      file=sys.stderr)
 
     n_fail = 0
     with out.open("a") as fh:

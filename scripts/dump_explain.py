@@ -16,8 +16,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF_DIR = "/root/testdata/sf0.1"
-
 
 def main() -> int:
     if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
@@ -25,6 +23,7 @@ def main() -> int:
         return 2
     rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
+    from open_molecule_data_pipeline_spark.profile import SF_DIR
     from open_molecule_data_pipeline_spark.registry import load_all
     from open_molecule_data_pipeline_spark.session import get_spark
 

@@ -14,10 +14,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF_DIR = "/root/testdata/sf0.1"
-
 
 def main() -> None:
+    from open_molecule_data_pipeline_spark.profile import SF_DIR
     from open_molecule_data_pipeline_spark.registry import load_all
     from open_molecule_data_pipeline_spark.session import get_spark
 

@@ -1,5 +1,5 @@
 """Time named queries with bench.py's exact methodology (min of 3, noop
-sink, sf0.001 warm-up, cache hygiene between queries) without paying a
+sink, sf0.001 warm-up, cache sweep between queries) without paying a
 full 34-query run — the fast inner loop for the optimization rounds.
 
 Usage: python scripts/time_queries.py name1 name2 ... [--sf DIR] [--runs N]
@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO_ROOT = str(Path(__file__).resolve().parent.parent)
@@ -19,8 +18,16 @@ if REPO_ROOT not in sys.path:
 
 
 def main() -> None:
+    from open_molecule_data_pipeline_spark.profile import (
+        SF_DIR,
+        time_query,
+        touch_tables,
+    )
+    from open_molecule_data_pipeline_spark.registry import load_all
+    from open_molecule_data_pipeline_spark.session import get_spark
+
     args = list(sys.argv[1:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
     runs = 3
     if "--sf" in args:
         i = args.index("--sf")
@@ -31,52 +38,15 @@ def main() -> None:
         runs = int(args[i + 1])
         del args[i : i + 2]
 
-    from open_molecule_data_pipeline_spark.registry import load_all
-    from open_molecule_data_pipeline_spark.session import get_spark
-
     spark = get_spark(app_name="omdp-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all()
-
-    from open_molecule_data_pipeline_spark.catalog import TABLES, table
-
-    for name in TABLES:
-        table(spark, sf_dir, name).write.format("noop").mode("overwrite").save()
-
-    warm_dir = "/root/testdata/sf0.001"
-    warm_ok = Path(warm_dir).exists()
+    touch_tables(spark, sf_dir)
     timings: dict[str, float] = {}
     for name in args:
-        spec = specs[name]
-        try:
-            spark.catalog.clearCache()
-            jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jrdds.values():
-                jrdd.unpersist(False)
-        except Exception as exc:
-            print(
-                f"time_queries: {name}: cache sweep failed: {exc!r}",
-                file=sys.stderr,
-            )
-        if warm_ok:
-            try:
-                spec.fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:
-                print(
-                    f"time_queries: {name}: warm-up failed: {exc!r}",
-                    file=sys.stderr,
-                )
-        best = []
-        for _ in range(runs):
-            t0 = time.time()
-            spec.fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best.append(time.time() - t0)
-        timings[name] = round(min(best), 3)
-        print(f"{name}: min={min(best):.3f} runs={[round(b,3) for b in best]}")
+        walls = time_query(spark, name, specs[name].fn, sf_dir, runs, "time_queries")
+        timings[name] = round(min(walls), 3)
+        print(f"{name}: min={min(walls):.3f} runs={[round(w, 3) for w in walls]}")
     print(json.dumps(timings))
     spark.stop()
 

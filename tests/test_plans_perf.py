@@ -664,18 +664,15 @@ def test_unhinted_joins_degrade_to_smj_with_identical_results(spark, sf_dir):
 
 
 def test_shuffle_profile_event_attribution():
-    """Unit spec for scripts/shuffle_profile.py's event-log parser: task
-    metrics land on the query owning the stage via JobStart's job group;
-    stages from foreign groups (session warm-up, noop commits) and events
-    before any JobStart are dropped, not misattributed."""
+    """Unit spec for the harness's event-log parser (profile.parse_events):
+    jobs and task metrics land on the query owning the stage via JobStart's
+    job group; stages from foreign groups (session warm-up, noop commits)
+    and events before any JobStart are dropped, not misattributed; driver
+    gaps count the time before and between a query's jobs, not inside
+    them or in other groups' jobs."""
     import json as _json
-    import sys as _sys
-    from pathlib import Path as _Path
 
-    scripts = _Path(__file__).resolve().parent.parent / "scripts"
-    if str(scripts) not in _sys.path:
-        _sys.path.insert(0, str(scripts))
-    from shuffle_profile import parse_events
+    from open_molecule_data_pipeline_spark.profile import parse_events
 
     def task_end(stage, write=0, read_local=0, read_remote=0, spill=0,
                  dur_ms=100):
@@ -714,6 +711,11 @@ def test_shuffle_profile_event_attribution():
         task_end(4, write=8, dur_ms=100),
     ]
     agg = parse_events(lines, ["q1", "q2"])
+    shuffle_fields = (
+        "tasks", "input_bytes", "shuffle_write_bytes", "shuffle_read_bytes",
+        "memory_spill_bytes", "disk_spill_bytes", "max_task_ms", "stage_skew",
+    )
+    agg = {q: {k: agg[q][k] for k in shuffle_fields} for q in agg}
     assert agg["q1"] == {
         "tasks": 2, "input_bytes": 20, "shuffle_write_bytes": 100,
         "shuffle_read_bytes": 100, "memory_spill_bytes": 0,
@@ -728,6 +730,88 @@ def test_shuffle_profile_event_attribution():
         # stage 4: max 300 / mean 200 = 1.5
         "stage_skew": 1.5,
     }
+
+    def timed_job(group, job, stages, start, end):
+        return [
+            _json.dumps({
+                "Event": "SparkListenerJobStart", "Job ID": job,
+                "Submission Time": start, "Stage IDs": stages,
+                "Properties": {"spark.jobGroup.id": group},
+            }),
+            _json.dumps({
+                "Event": "SparkListenerJobEnd", "Job ID": job,
+                "Completion Time": end,
+            }),
+        ]
+
+    def stage_done(stage):
+        return _json.dumps({
+            "Event": "SparkListenerStageCompleted",
+            "Stage Info": {"Stage ID": stage, "Submission Time": 0,
+                           "Completion Time": 10, "Number of Tasks": 1},
+        })
+
+    timed = [
+        *timed_job("q1", 10, [1], 1_000, 1_400),
+        stage_done(1),
+        *timed_job("q1", 11, [1, 2], 1_700, 2_000),  # reuses stage 1 (skipped)
+        stage_done(2),
+        *timed_job("other", 12, [3], 2_100, 2_500),  # not a profiled query
+        stage_done(3),
+        *timed_job("q2", 13, [4], 2_600, 2_900),
+    ]
+    spans = {"q1": (900, 2_200), "q2": (2_550, 3_000)}
+    agg = parse_events(timed, ["q1", "q2"], spans)
+    # q1: gaps 100 ms (run start -> job 10) + 300 ms (job 10 -> job 11)
+    assert (agg["q1"]["jobs"], agg["q1"]["job_s"]) == (2, 0.7)
+    assert (agg["q1"]["driver_gap_s"], agg["q1"]["tail_s"]) == (0.4, 0.2)
+    assert agg["q1"]["stages"] == 2
+    assert [j["gap_ms"] for j in agg["q1"]["job_detail"]] == [100, 300]
+    # q2: the "other" group's job is not q2's; its 50 ms head gap is
+    assert (agg["q2"]["jobs"], agg["q2"]["job_s"]) == (1, 0.3)
+    assert (agg["q2"]["driver_gap_s"], agg["q2"]["tail_s"]) == (0.05, 0.1)
+    # without spans a run starts at its first job: only the gap between jobs
+    agg = parse_events(timed, ["q1", "q2"])
+    assert agg["q1"]["driver_gap_s"] == 0.3
+    assert agg["q2"]["driver_gap_s"] == agg["q2"]["tail_s"] == 0.0
+
+
+def test_harness_sweep_frees_checkpoint_blocks(spark):
+    """The harness's cache sweep between measured queries leaves no
+    persistent RDD behind: clearCache() drops the persisted DataFrame but
+    not localCheckpoint blocks, which would otherwise tax the next query."""
+    from open_molecule_data_pipeline_spark.profile import sweep
+
+    persisted = spark.range(1000).selectExpr("id * 2 AS x").persist()
+    persisted.count()
+    spark.range(500).selectExpr("id + 1 AS y").localCheckpoint()
+    jsc = spark.sparkContext._jsc
+    assert len(jsc.getPersistentRDDs()) >= 2
+    sweep(spark, "fixture", "test")
+    assert len(jsc.getPersistentRDDs()) == 0
+
+
+def test_harness_owns_cache_sweep_and_event_log():
+    """profile.py is the one owner of the session state the harnesses
+    manage: outside it, neither bench.py nor any script sweeps caches or
+    sets the event-log options (copies drift: three scripts once swept
+    with clearCache() alone)."""
+    import re
+    from pathlib import Path as _Path
+
+    root = _Path(__file__).resolve().parent.parent
+    owned = re.compile(r"getPersistentRDDs|clearCache|eventLog")
+    profile = root / "open_molecule_data_pipeline_spark" / "profile.py"
+    assert {"getPersistentRDDs", "clearCache", "eventLog"} <= set(
+        owned.findall(profile.read_text())
+    )
+    offenders = [
+        f"{path.relative_to(root)}:{lineno}"
+        for path in [root / "bench.py", *sorted((root / "scripts").glob("*.py"))]
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if owned.search(line)
+    ]
+    assert not offenders, offenders
 
 
 def test_headline_set_capped():
