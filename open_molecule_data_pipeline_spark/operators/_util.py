@@ -12,7 +12,31 @@ correctly-rounded FP op that is bit-identical across engines.
 from __future__ import annotations
 
 from pyspark.sql import Column
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+# Spark-side vector folds, rendered with ``.format(a=..., b=...)`` into
+# ``F.expr``: the inner product (cosine numerator, and the squared norm
+# with a == b) and the squared L2 distance. Each is one fixed-order
+# per-row fold over doubles, so the same operands give bit-identical
+# results on every run and partitioning (the DuckDB oracles use
+# ``list_dot_product`` / ``list_aggregate`` twins of these folds).
+_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
+    " cast(0 as double), (acc, v) -> acc + v)"
+)
+_D2 = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+    " cast(0 as double), (acc, x) -> acc + x)"
+)
+
+
+def top_n(df, key: str, n: int, *order, rank: str = "rn"):
+    """The first ``n`` rows per ``key`` in ``order``, numbered 1..n in
+    column ``rank``. ``row_number`` never ties, so ``order`` must end in
+    an id column to make the cut deterministic."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
 
 
 def lsum(col: Column | str, scale: int) -> Column:

@@ -25,13 +25,12 @@ corpus scan 3 int64 columns wide; the rerank touches R rows per query.
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
-from .similarity import _DOT, K, N_QUERIES
+from ._util import _DOT, spread, top_n
+from .similarity import K, N_QUERIES, _recall_at_k
 
 R_CAND = 20  # Hamming shortlist size per query
 
@@ -137,17 +136,34 @@ def _sig_table(spark, sf_dir):
     )
 
 
-def _bq_top(spark, sf_dir):
-    v = _sig_table(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
+def _queries(v):
+    return v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("lo").alias("qlo"),
         F.col("hi").alias("qhi"),
         F.col("nn").alias("qq"),
     )
+
+
+def _cos6():
+    """Micro-quantized exact cosine of the query (qe, qq) and the
+    candidate (embedding, nn)."""
+    return (
+        F.round(
+            F.expr(_DOT.format(a="qe", b="embedding"))
+            / (F.col("qq") * F.col("nn"))
+            * 1_000_000
+        )
+        .cast("long")
+        .alias("cos6")
+    )
+
+
+def _bq_top(spark, sf_dir):
+    v = _sig_table(spark, sf_dir)
     ham = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+        v.join(F.broadcast(_queries(v)), F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -163,25 +179,10 @@ def _bq_top(spark, sf_dir):
             "qq",
         )
     )
-    wc = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    cand = ham.withColumn("rn", F.row_number().over(wc)).filter(
-        F.col("rn") <= R_CAND
-    )
-    cos6 = (
-        F.round(
-            F.expr(_DOT.format(a="qe", b="embedding"))
-            / (F.col("qq") * F.col("nn"))
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("cos6")
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cos6"), "neighbor_id")
-    return (
-        cand.select("query_id", "neighbor_id", "hamming", cos6)
-        .withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= K)
-        .select("query_id", "neighbor_id", "hamming", "cos6")
+    cand = top_n(ham, "query_id", R_CAND, "hamming", "neighbor_id")
+    reranked = cand.select("query_id", "neighbor_id", "hamming", _cos6())
+    return top_n(reranked, "query_id", K, F.desc("cos6"), "neighbor_id").select(
+        "query_id", "neighbor_id", "hamming", "cos6"
     )
 
 
@@ -204,41 +205,11 @@ def sim_binary_quant_hamming(spark, sf_dir):
 def sim_binary_quant_recall(spark, sf_dir):
     """Measured quality of the BQ shortlist: recall@5 of the BQ-rerank
     results against the exact cosine top-5, per query."""
-    bq = F.broadcast(
-        _bq_top(spark, sf_dir).select(
-            "query_id", F.col("neighbor_id").alias("bq_neighbor")
-        )
-    )
     v = _sig_table(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nn").alias("qq"),
+    scored = v.join(F.broadcast(_queries(v)), F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _cos6(),
     )
-    cos6 = (
-        F.round(
-            F.expr(_DOT.format(a="qe", b="embedding"))
-            / (F.col("qq") * F.col("nn"))
-            * 1_000_000
-        )
-        .cast("long")
-        .alias("cos6")
-    )
-    we = W.partitionBy("query_id").orderBy(F.desc("cos6"), "neighbor_id")
-    exact = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos6)
-        .withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= K)
-        .select("query_id", "neighbor_id")
-    )
-    joined = exact.join(
-        bq,
-        (exact.query_id == bq.query_id)
-        & (exact.neighbor_id == bq.bq_neighbor),
-        "left",
-    ).select(exact.query_id, "bq_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("bq_neighbor").cast("long").alias("n_hit"),
-        F.round(F.count("bq_neighbor") / F.lit(float(K)), 6).alias("recall"),
-    )
+    exact = top_n(scored, "query_id", K, F.desc("cos6"), "neighbor_id")
+    return _recall_at_k(exact, _bq_top(spark, sf_dir), K)

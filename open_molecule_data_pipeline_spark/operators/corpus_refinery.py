@@ -230,9 +230,8 @@ def text_bloom_decontaminate(spark, sf_dir):
     )
     bits.count()
     # not unpersisted here: the returned DataFrame still reads this
-    # cache. The leak is bounded to one query's lifetime — bench.py
-    # drops every persistent RDD between queries and the sweep/parity
-    # harnesses run one query per session.
+    # cache. Only the harness sweep (``profile.sweep``) frees it between
+    # queries; outside that harness it stays in the session.
     b0 = bits.select(F.col("p").alias("p0"), F.lit(1).alias("h0"))
     b1 = bits.select(F.col("p").alias("p1"), F.lit(1).alias("h1"))
     ev_flag = ev.select("g", F.lit(1).alias("exact_hit"))

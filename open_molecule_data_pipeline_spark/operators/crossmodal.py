@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
-from .semdedup import _DOT, _DOT_DUCK, _TAU2
+from ._util import _DOT, spread
+from .semdedup import _DOT_DUCK, _TAU2
 
 _N_SLICES = 8
 

@@ -969,8 +969,9 @@ def graph_label_propagation(spark, sf_dir):
     # pipeline (profile: a duplicate multi-exchange subtree). One
     # persist+count runs the propagation once; the cache is one row per
     # surviving label, far smaller than the label table itself. Not
-    # unpersisted here (the returned DataFrame reads it); bench.py drops
-    # all persistent RDDs between queries, bounding the leak.
+    # unpersisted here (the returned DataFrame reads it). Only the
+    # harness sweep (``profile.sweep``) frees it between queries;
+    # outside that harness it stays in the session.
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("n_nodes")).persist()
     sizes.count()
     tot = sizes.agg(F.count(F.lit(1)).alias("n_communities"))

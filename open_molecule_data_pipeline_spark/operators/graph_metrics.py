@@ -63,9 +63,9 @@ def _edges_cached(spark, sf_dir):
     profile: seven concurrent 32-task jobs over the identical edge
     subtree). One count barrier makes every consumer a block read — at
     100 TB each skipped re-run is a corpus-slice scan + self-join.
-    Not unpersisted by the caller (its result still reads the cache);
-    bench.py drops all persistent RDDs between queries, bounding the
-    leak to one query's lifetime."""
+    Not unpersisted by the caller (its result still reads the cache).
+    Only the harness sweep (``profile.sweep``) frees it between queries;
+    outside that harness it stays in the session."""
     e = _edges(spark, sf_dir).persist()
     e.count()
     return e

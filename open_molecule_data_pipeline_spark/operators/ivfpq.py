@@ -24,29 +24,30 @@ constant-bounded and BROADCAST; the only corpus-wide shuffles are the
 argmin aggregations. Determinism: sub-vector L2 folds are fixed-order
 per-row doubles (bit-identical across engines), LUT entries are
 quantized to int64 micro-units BEFORE the 4-term ADC sum, ranks
-tie-break on ids (the pq.py rules).
+tie-break on ids (the pq.py rules). The centroid pick and the recall
+join come from ``similarity.py``; the sub-space split, codebook, encoder,
+LUT and ADC rank from ``pq.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
-
-K_CENT = 32
-N_SUB = 4
-SUB_DIM = 16
-N_CODES = 8
-NPROBE = 2
-N_QUERIES = 10  # the LAST 10 vec_ids (max-derived): bounded batch
-
-_D2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as double), (acc, x) -> acc + x)"
+from ._util import _D2, spread, top_n
+from .pq import (
+    N_CODES,
+    N_QUERIES,  # the LAST 10 vec_ids (max-derived): bounded batch
+    SUB_DIM,
+    _adc_topn,
+    _codebook,
+    _d6,
+    _encode,
+    _lut,
+    _sub_vectors,
 )
+from .similarity import K_CENT, NPROBE, _recall_at_k, _sampled_centroids
 
 _SQL_D2 = (
     "list_aggregate(list_transform(list_zip({a}, {b}),"
@@ -152,31 +153,31 @@ def _vectors(spark, sf_dir):
 
 
 def _centroids(v):
+    return _sampled_centroids(v, F.col("e").alias("ce"))
+
+
+def _query_batch(v):
+    """(query_id, qe): the LAST N_QUERIES vec_ids of ``v`` — max-derived at
+    runtime, so the batch stays bounded however large the corpus grows."""
+    mx = v.groupBy().agg(F.max("vec_id").alias("mx"))
     return (
-        v.select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("e").alias("ce"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "cent_id")
-        .limit(K_CENT)
-        .drop("h")
+        v.crossJoin(F.broadcast(mx))
+        .filter(F.col("vec_id") >= F.col("mx") - (N_QUERIES - 1))
+        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
     )
 
 
-def _residual_subspaces(df, vec_col: str):
-    """Explode a residual array column into N_SUB 16-dim sub-vectors."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub_id"),
-                F.slice(vec_col, SUB_DIM * s + 1, SUB_DIM).alias("sv"),
-            )
-            for s in range(N_SUB)
-        ]
+def _exact_top3(v):
+    """(query_id, neighbor_id): the exact full-vector L2 top-3 of the
+    query batch over the corpus ``v``, ranked on micro-quantized int64
+    distances (then vec_id) — the ground truth of both recall evals."""
+    scored = (
+        v.crossJoin(F.broadcast(_query_batch(v)))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _d6("qe", "e").alias("d6"))
     )
-    return df.withColumn("s", F.explode(subs)).select(
-        *[c for c in df.columns if c != vec_col], "s.sub_id", "s.sv"
+    return top_n(scored, "query_id", 3, "d6", "vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id")
     )
 
 
@@ -206,73 +207,34 @@ def _adc_ranked(spark, sf_dir, topn: int):
             F.expr("zip_with(e, ce, (x, y) -> x - y)").alias("r"),
         )
     )
-    subs = _residual_subspaces(resid, "r")
-    cb = F.broadcast(
-        subs.filter(F.col("vec_id") < N_CODES).select(
-            F.col("vec_id").alias("code"), "sub_id", F.col("sv").alias("cv")
-        )
-    )
-    enc = (
-        subs.join(cb, "sub_id")
-        .select(
-            "vec_id",
-            "cent_id",
-            "sub_id",
-            "code",
-            F.expr(_D2.format(a="sv", b="cv")).alias("d2"),
-        )
-        .groupBy("vec_id", "cent_id", "sub_id")
-        .agg(F.min(F.struct("d2", "code")).alias("w"))
-        .select("vec_id", "cent_id", "sub_id", F.col("w.code").alias("code"))
-    )
+    subs = _sub_vectors(resid, "r")
+    cb = _codebook(subs)
+    enc = _encode(subs, cb, "vec_id", "cent_id")
 
-    # query batch: the LAST N_QUERIES ids (bounded regardless of corpus)
-    mx = v.groupBy().agg(F.max("vec_id").alias("mx"))
-    qs = (
-        v.crossJoin(F.broadcast(mx))
-        .filter(F.col("vec_id") >= F.col("mx") - (N_QUERIES - 1))
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    wq = W.partitionBy("query_id").orderBy("d2q", "cent_id")
-    probe = (
-        qs.crossJoin(F.broadcast(cent))
+    # the query batch probes its NPROBE nearest cells; the LUT holds its
+    # residual to each probed centroid
+    probe = top_n(
+        _query_batch(v)
+        .crossJoin(F.broadcast(cent))
         .select(
             "query_id",
             "cent_id",
             "ce",
             "qe",
             F.round(F.expr(_D2.format(a="qe", b="ce")), 6).alias("d2q"),
-        )
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= NPROBE)
-        .select(
-            "query_id",
-            "cent_id",
-            F.expr("zip_with(qe, ce, (x, y) -> x - y)").alias("r"),
-        )
+        ),
+        "query_id",
+        NPROBE,
+        "d2q",
+        "cent_id",
+        rank="crn",
+    ).select(
+        "query_id",
+        "cent_id",
+        F.expr("zip_with(qe, ce, (x, y) -> x - y)").alias("r"),
     )
-    qsub = _residual_subspaces(probe, "r")
-    lut = F.broadcast(
-        qsub.join(cb, "sub_id").select(
-            "query_id",
-            "cent_id",
-            "sub_id",
-            "code",
-            F.round(F.expr(_D2.format(a="sv", b="cv")) * 1000000)
-            .cast("long")
-            .alias("d6"),
-        )
-    )
-    adc = (
-        enc.join(lut, ["cent_id", "sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d6").cast("long").alias("dist6"))
-    )
-    wr = W.partitionBy("query_id").orderBy("dist6", "vec_id")
-    return adc.withColumn("rank", F.row_number().over(wr).cast("int")).filter(
-        F.col("rank") <= topn
-    )
+    lut = _lut(_sub_vectors(probe, "r"), cb, "query_id", "cent_id")
+    return _adc_topn(enc, lut, topn, "cent_id")
 
 
 @register(
@@ -342,40 +304,8 @@ GROUP BY exact.query_id
     tags=("similarity", "ivf", "pq", "eval"),
 )
 def sim_ivfpq_recall(spark, sf_dir):
-    ivf = F.broadcast(
-        sim_ivfpq_adc_topk(spark, sf_dir).select(
-            "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-        )
-    )
-    v = _vectors(spark, sf_dir)
-    mx = v.groupBy().agg(F.max("vec_id").alias("mx"))
-    qs = (
-        v.crossJoin(F.broadcast(mx))
-        .filter(F.col("vec_id") >= F.col("mx") - (N_QUERIES - 1))
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    d6 = F.round(F.expr(_D2.format(a="qe", b="e")) * 1000000).cast("long")
-    we = W.partitionBy("query_id").orderBy("d6", "vec_id")
-    exact = (
-        v.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", d6.alias("d6"))
-        .withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    joined = exact.join(
-        ivf,
-        (exact.query_id == ivf.query_id)
-        & (exact.neighbor_id == ivf.ivf_neighbor),
-        "left",
-    ).select(exact.query_id, "ivf_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("ivf_neighbor").cast("long").alias("n_hit"),
-        F.round(F.count("ivf_neighbor") / F.lit(3).cast("double"), 6).alias(
-            "recall"
-        ),
-    )
+    truth = _exact_top3(_vectors(spark, sf_dir))
+    return _recall_at_k(truth, sim_ivfpq_adc_topk(spark, sf_dir), 3)
 
 
 # --------------------------------------------------------------------------
@@ -430,37 +360,18 @@ def _rerank_topk(spark, sf_dir):
         )
     )
     v = _vectors(spark, sf_dir)
-    mx = v.groupBy().agg(F.max("vec_id").alias("mx"))
-    qs = F.broadcast(
-        v.crossJoin(F.broadcast(mx))
-        .filter(F.col("vec_id") >= F.col("mx") - (N_QUERIES - 1))
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
     # corpus scan x broadcast candidate list: only the R*|Q| candidate
     # vectors survive the join, then the exact distance runs on those
     ex = (
-        v.join(cand, v.vec_id == cand.neighbor_id)
-        .join(qs, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.expr(_D2.format(a="qe", b="e")) * 1000000)
-            .cast("long")
-            .alias("d6"),
-        )
+        v.join(cand, F.col("vec_id") == F.col("neighbor_id"))
+        .join(F.broadcast(_query_batch(v)), "query_id")
+        .select("query_id", "neighbor_id", _d6("qe", "e").alias("d6"))
     )
-    wr = W.partitionBy("query_id").orderBy("d6", "neighbor_id")
-    return (
-        ex.withColumn("rank", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round(F.col("d6") / F.lit(1000000).cast("double"), 6).alias(
-                "exact_dist"
-            ),
-        )
+    return top_n(ex, "query_id", 3, "d6", "neighbor_id", rank="rank").select(
+        "query_id",
+        "rank",
+        "neighbor_id",
+        F.round(F.col("d6") / F.lit(1000000).cast("double"), 6).alias("exact_dist"),
     )
 
 
@@ -506,37 +417,5 @@ GROUP BY exact.query_id
     tags=("similarity", "ivf", "pq", "eval"),
 )
 def sim_ivfpq_rerank_recall(spark, sf_dir):
-    rr = F.broadcast(
-        _rerank_topk(spark, sf_dir).select(
-            "query_id", F.col("neighbor_id").alias("rr_neighbor")
-        )
-    )
-    v = _vectors(spark, sf_dir)
-    mx = v.groupBy().agg(F.max("vec_id").alias("mx"))
-    qs = (
-        v.crossJoin(F.broadcast(mx))
-        .filter(F.col("vec_id") >= F.col("mx") - (N_QUERIES - 1))
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    d6 = F.round(F.expr(_D2.format(a="qe", b="e")) * 1000000).cast("long")
-    we = W.partitionBy("query_id").orderBy("d6", "vec_id")
-    exact = (
-        v.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", d6.alias("d6"))
-        .withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    joined = exact.join(
-        rr,
-        (exact.query_id == rr.query_id)
-        & (exact.neighbor_id == rr.rr_neighbor),
-        "left",
-    ).select(exact.query_id, "rr_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("rr_neighbor").cast("long").alias("n_hit"),
-        F.round(F.count("rr_neighbor") / F.lit(3).cast("double"), 6).alias(
-            "recall"
-        ),
-    )
+    truth = _exact_top3(_vectors(spark, sf_dir))
+    return _recall_at_k(truth, _rerank_topk(spark, sf_dir), 3)

@@ -27,12 +27,11 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import _DOT, spread, top_n
 
 _JL_DIMS = 16
 _EMB_DIMS = 64
@@ -80,12 +79,6 @@ _PROJ_DUCK = (
 _DOTD = (
     "list_aggregate(list_transform(list_zip({a}, {b}),"
     " p -> cast(p[1] AS DOUBLE) * cast(p[2] AS DOUBLE)), 'sum')"
-)
-
-_DOTS = (
-    "aggregate(zip_with({a}, {b},"
-    " (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, t) -> acc + t)"
 )
 
 _JL_ORACLE = """
@@ -159,8 +152,8 @@ def sim_jl_projection_recall(spark, sf_dir):
         "vec_id",
         "e",
         "p",
-        F.expr(_DOTS.format(a="e", b="e")).alias("ne2"),
-        F.expr(_DOTS.format(a="p", b="p")).alias("np2"),
+        F.expr(_DOT.format(a="e", b="e")).alias("ne2"),
+        F.expr(_DOT.format(a="p", b="p")).alias("np2"),
     )
     q = vv.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"),
@@ -171,22 +164,21 @@ def sim_jl_projection_recall(spark, sf_dir):
     )
 
     def topk(score_col):
-        w = W.partitionBy("qid").orderBy(F.desc("score"), F.col("vec_id"))
-        return (
+        scored = (
             vv.crossJoin(F.broadcast(q))
             .where(F.col("vec_id") != F.col("qid"))
             .withColumn("score", score_col)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= _TOP_K)
-            .select("qid", "vec_id")
+        )
+        return top_n(scored, "qid", _TOP_K, F.desc("score"), F.col("vec_id")).select(
+            "qid", "vec_id"
         )
 
     exact = topk(
-        F.expr(_DOTS.format(a="qe", b="e"))
+        F.expr(_DOT.format(a="qe", b="e"))
         / F.sqrt(F.col("qne2") * F.col("ne2"))
     )
     approx = topk(
-        F.expr(_DOTS.format(a="qp", b="p"))
+        F.expr(_DOT.format(a="qp", b="p"))
         / F.sqrt(F.col("qnp2") * F.col("np2"))
     )
     hit = exact.join(approx, ["qid", "vec_id"]).groupBy("qid").agg(

@@ -189,8 +189,9 @@ def mllib_minhash_recall(spark, sf_dir):
     # each ran TWICE (profile: three concurrent 12-25 s jobs contending
     # for the same cores). Same persist+count parity as the _pairs
     # sibling below. These caches are deliberately not unpersisted in
-    # the operator (the returned DataFrame reads them); bench.py drops
-    # all persistent RDDs between queries, bounding the leak.
+    # the operator (the returned DataFrame reads them). Only the harness
+    # sweep (``profile.sweep``) frees them between queries; outside that
+    # harness they stay in the session.
     found.count(), exact.count()
     hit = found.join(exact, ["doc_a", "doc_b"]).select(F.lit(1).alias("one"))
     stats = (

@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import local_df, spread
-from .similarity import _DOT, N_QUERIES
+from ._util import _DOT, local_df, spread
+from .similarity import N_QUERIES
 
 _R = 10  # candidate pool per query
 _K_MMR = 5  # results per query

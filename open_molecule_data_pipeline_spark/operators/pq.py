@@ -19,16 +19,18 @@ Determinism/parity notes (see memory playbook):
 - the codebook is the first 8 vectors per subspace (deterministic seed
   choice, standing in for trained centroids — training is one k-means
   Lloyd round away, cf. ``ml_kmeans_assign``).
+
+The sub-space split, codebook, encoder, LUT and ADC rank below serve
+both this module (raw vectors) and ``ivfpq.py`` (coarse residuals).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import _D2, spread, top_n
 
 N_SUB = 4
 SUB_DIM = 16
@@ -40,17 +42,31 @@ N_CODES = 8
 # join; caught by the r5 bench promotion of this query.)
 N_QUERIES = 10
 
-_D2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as double), (acc, x) -> acc + x)"
-)
+
+def _sub_vectors(df, vec_col: str):
+    """Split the array column ``vec_col`` into its N_SUB SUB_DIM-dim
+    sub-vectors (sub_id, v) via one narrow explode; the other columns of
+    ``df`` ride along."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(s).alias("sub_id"),
+                F.slice(vec_col, SUB_DIM * s + 1, SUB_DIM).alias("v"),
+            )
+            for s in range(N_SUB)
+        ]
+    )
+    keep = [c for c in df.columns if c != vec_col]
+    return df.select(*keep, F.explode(subs).alias("s")).select(
+        *keep, "s.sub_id", "s.v"
+    )
 
 
 def _subspaces(spark, sf_dir):
     """(vec_id, label, sub_id, v): each embedding split into N_SUB
-    double-upcast sub-vectors via one narrow explode. spread() adds one
-    up-front repartition when the input arrives as a single file/partition
-    (else the downstream codebook scoring serializes on one core)."""
+    double-upcast sub-vectors. spread() adds one up-front repartition when
+    the input arrives as a single file/partition (else the downstream
+    codebook scoring serializes on one core)."""
     emb = spread(
         table(spark, sf_dir, "embeddings").select(
             "vec_id",
@@ -59,41 +75,61 @@ def _subspaces(spark, sf_dir):
         ),
         "vec_id",
     )
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub_id"),
-                F.slice("e", SUB_DIM * s + 1, SUB_DIM).alias("v"),
-            )
-            for s in range(N_SUB)
-        ]
+    return _sub_vectors(emb, "e")
+
+
+def _d6(a: str, b: str):
+    """Squared L2 distance of array columns ``a`` and ``b`` as int64
+    micro-units — the form every cross-row sum and rank here uses."""
+    return F.round(F.expr(_D2.format(a=a, b=b)) * 1000000).cast("long")
+
+
+def _codebook(subs):
+    """(code, sub_id, cv): the first N_CODES sub-vectors per subspace."""
+    return subs.filter(F.col("vec_id") < N_CODES).select(
+        F.col("vec_id").alias("code"), "sub_id", F.col("v").alias("cv")
     )
-    return emb.select(
-        "vec_id", "label", F.explode(subs).alias("s")
-    ).select("vec_id", "label", "s.sub_id", "s.v")
 
 
-def _encoded(spark, sf_dir):
-    """(vec_id, sub_id, code, d2): nearest codeword per subspace.
+def _encode(subs, cb, *keys):
+    """(*keys, sub_id, code, d2): nearest codeword per (keys, subspace).
 
     The codebook (N_CODES rows per subspace) is broadcast; candidates are
     a broadcast nested-loop over 8 codes — per-row work, no shuffle until
-    the per-(vec, sub) argmin aggregation.
+    the per-(keys, sub) argmin aggregation.
     """
-    subs = _subspaces(spark, sf_dir)
-    cb = subs.filter(F.col("vec_id") < N_CODES).select(
-        F.col("vec_id").alias("code"), "sub_id", F.col("v").alias("cv")
+    return (
+        subs.join(F.broadcast(cb), "sub_id")
+        .select(
+            *keys, "sub_id", "code", F.expr(_D2.format(a="v", b="cv")).alias("d2")
+        )
+        .groupBy(*keys, "sub_id")
+        .agg(F.min(F.struct("d2", "code")).alias("w"))
+        .select(*keys, "sub_id", "w.code", "w.d2")
     )
-    scored = subs.join(F.broadcast(cb), "sub_id").select(
-        "vec_id",
-        "sub_id",
-        "code",
-        F.expr(_D2.format(a="v", b="cv")).alias("d2"),
+
+
+def _lut(qsub, cb, *keys):
+    """(*keys, sub_id, code, d6): the ADC lookup table — every query
+    sub-vector's squared distance to each codeword of its subspace, as
+    int64 micro-units."""
+    return qsub.join(F.broadcast(cb), "sub_id").select(
+        *keys, "sub_id", "code", _d6("v", "cv").alias("d6")
     )
-    best = scored.groupBy("vec_id", "sub_id").agg(
-        F.min(F.struct("d2", "code")).alias("w")
+
+
+def _adc_topn(enc, lut, n, *cells):
+    """(query_id, vec_id, dist6, rank): asymmetric distance — per (query,
+    vector) the sum of the broadcast LUT entries its codes select (joined
+    on ``cells``, sub_id and code), self-match dropped, top ``n`` per query
+    by (dist6, vec_id). The sum and the rank are pure int64."""
+    adc = (
+        enc.join(F.broadcast(lut), [*cells, "sub_id", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("d6").alias("dist6"))
     )
-    return best.select("vec_id", "sub_id", "w.code", "w.d2")
+    return top_n(adc, "query_id", n, "dist6", "vec_id", rank="rank")
 
 
 _SUBS_CTE = f"""
@@ -142,7 +178,8 @@ GROUP BY sub_id, cast(code AS BIGINT)
 def sim_pq_encode(spark, sf_dir):
     """Codebook usage + quantization distortion per (subspace, codeword) —
     the health report of a PQ index build."""
-    enc = _encoded(spark, sf_dir)
+    subs = _subspaces(spark, sf_dir)
+    enc = _encode(subs, _codebook(subs), "vec_id")
     return enc.groupBy("sub_id", F.col("code").cast("long").alias("code")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
@@ -194,52 +231,23 @@ def sim_pq_adc_topk(spark, sf_dir):
     corpus side touches only the 4-code representation — the at-scale
     memory/IO win. Distances accumulate as scaled int64 so ranking is pure
     integer comparison (no float sum-order hazard)."""
-    enc = _encoded(spark, sf_dir)
     subs = _subspaces(spark, sf_dir)
-    cb = subs.filter(F.col("vec_id") < N_CODES).select(
-        F.col("vec_id").alias("code"), "sub_id", F.col("v").alias("cv")
-    )
+    cb = _codebook(subs)
     qmin = table(spark, sf_dir, "embeddings").agg(
         (F.max("vec_id") - F.lit(N_QUERIES - 1)).alias("qmin")
     )
-    lut = (
+    qsub = (
         subs.crossJoin(F.broadcast(qmin))
         .filter(F.col("vec_id") >= F.col("qmin"))
         .drop("qmin")
         .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "sub_id")
-        .select(
-            "query_id",
-            "sub_id",
-            "code",
-            F.round(F.expr(_D2.format(a="v", b="cv")) * 1000000)
-            .cast("long")
-            .alias("d6"),
-        )
     )
-    adc = (
-        enc.join(F.broadcast(lut), ["sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d6").alias("dist6"))
-    )
-    w = Window.partitionBy("query_id").orderBy("dist6", "vec_id")
-    return (
-        adc.select(
-            "query_id",
-            "vec_id",
-            "dist6",
-            F.row_number().over(w).cast("int").alias("rank"),
-        )
-        .filter(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            "rank",
-            "vec_id",
-            F.round(F.col("dist6") / F.lit(1000000).cast("double"), 6).alias(
-                "adc_dist"
-            ),
-        )
+    adc = _adc_topn(_encode(subs, cb, "vec_id"), _lut(qsub, cb, "query_id"), 3)
+    return adc.select(
+        "query_id",
+        "rank",
+        "vec_id",
+        F.round(F.col("dist6") / F.lit(1000000).cast("double"), 6).alias("adc_dist"),
     )
 
 
@@ -289,8 +297,6 @@ GROUP BY label
     tags=("ml", "similarity"),
 )
 def ml_embedding_quantize_int8(spark, sf_dir):
-    from ._util import spread
-
     emb = spread(table(spark, sf_dir, "embeddings"), "vec_id")
     flat = emb.select(
         "vec_id",

@@ -28,7 +28,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import local_df, spread
+from ._util import local_df, spread, top_n
+from .similarity import K_CENT as _K_CENT
+from .similarity import NPROBE as _NPROBE
+from .similarity import _assign_probe, _probe_topn, _sampled_scored
 
 _TERMS = ("dup", "vector", "key")  # one rare term (high idf), two common
 _K1 = 1.2
@@ -168,8 +171,6 @@ SELECT term, doc_id, tf FROM ranked WHERE rn <= {_IDX_TOP}
     tags=("text", "formats"),
 )
 def text_inverted_index_persisted(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     from .file_formats import _scratch
 
     d = spread(table(spark, sf_dir, "documents"), "doc_id")
@@ -191,13 +192,8 @@ def text_inverted_index_persisted(spark, sf_dir):
         .filter(F.col("bucket").isin(wanted_buckets))
         .filter(F.col("w").isin(*_IDX_TERMS))
     )
-    rn = F.row_number().over(
-        W.partitionBy("w").orderBy(F.desc("tf"), "doc_id")
-    )
-    return (
-        lists.withColumn("rn", rn)
-        .filter(F.col("rn") <= _IDX_TOP)
-        .select(F.col("w").alias("term"), "doc_id", "tf")
+    return top_n(lists, "w", _IDX_TOP, F.desc("tf"), "doc_id").select(
+        F.col("w").alias("term"), "doc_id", "tf"
     )
 
 
@@ -212,9 +208,9 @@ def text_inverted_index_persisted(spark, sf_dir):
 #   per-query term table: tf is ONE (doc_id, term) partial aggregation
 #   over the union-term filter (corpus-side cost is independent of the
 #   number of queries), df/qt/corpus-stats all broadcast;
-# - dense arm = the proven sampled-quantizer IVF index
-#   (similarity.py ``_sampled_scored``/``_assign_probe``): broadcast
-#   centroids, argmin assignment, probe only NPROBE inverted lists;
+# - dense arm = the proven sampled-quantizer IVF index (similarity.py
+#   ``_sampled_scored``/``_assign_probe``/``_probe_topn``): broadcast
+#   centroids, argmax assignment, probe only NPROBE inverted lists;
 # - fusion = RRF: score(q, d) = sum over arms of 1/(60 + rank). Both
 #   candidate lists are bounded (R per query per arm), so the
 #   full-outer fuse join and the final top-k touch O(|Q| * R) rows —
@@ -223,11 +219,6 @@ def text_inverted_index_persisted(spark, sf_dir):
 #   so the fused ordering is deterministic in both engines; absent-arm
 #   ranks surface as 0 (never legitimately 0 for a present arm).
 # --------------------------------------------------------------------------
-
-from .similarity import NPROBE as _NPROBE  # noqa: E402
-from .similarity import _assign_probe, _sampled_scored  # noqa: E402
-from .similarity import _DOT as _SIM_DOT  # noqa: E402
-from .similarity import K_CENT as _K_CENT  # noqa: E402
 
 _RRF_K = 60
 _RRF_R = 10  # per-arm candidate depth
@@ -358,26 +349,11 @@ FROM (
     bench=True,
 )
 def text_hybrid_rrf_topk(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     # ---- dense arm: sampled-quantizer IVF top-R per query -------------
     assign, probe = _assign_probe(_sampled_scored(spark, sf_dir))
     probe = probe.filter(F.col("query_id") < _RRF_NQ)
-    dot = F.expr(_SIM_DOT.format(a="qe", b="ce"))
-    dscored = (
-        assign.join(F.broadcast(probe), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            (dot / (F.col("qn") * F.col("cn"))).alias("cos"),
-        )
-    )
-    wd = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "doc_id")
-    dense = (
-        dscored.withColumn("rn", F.row_number().over(wd))
-        .filter(F.col("rn") <= _RRF_R)
-        .select("query_id", "doc_id", F.col("rn").alias("drn"))
+    dense = _probe_topn(assign, probe, _RRF_R).select(
+        "query_id", F.col("neighbor_id").alias("doc_id"), F.col("rn").alias("drn")
     )
 
     # ---- sparse arm: per-query BM25 over a broadcast term table -------
@@ -417,14 +393,9 @@ def text_hybrid_rrf_topk(spark, sf_dir):
         .groupBy("query_id", "doc_id")
         .agg(F.sum(term_score).alias("score"))
     )
-    ws = W.partitionBy("query_id").orderBy(
-        F.round("score", 6).desc(), "doc_id"
-    )
-    sparse = (
-        sscored.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= _RRF_R)
-        .select("query_id", "doc_id", F.col("rn").alias("srn"))
-    )
+    sparse = top_n(
+        sscored, "query_id", _RRF_R, F.round("score", 6).desc(), "doc_id"
+    ).select("query_id", "doc_id", F.col("rn").alias("srn"))
 
     # ---- RRF fusion over the two bounded candidate lists --------------
     fused = dense.join(sparse, ["query_id", "doc_id"], "full_outer").select(
@@ -437,10 +408,8 @@ def text_hybrid_rrf_topk(spark, sf_dir):
             + F.coalesce(F.lit(1.0) / (F.lit(_RRF_K) + F.col("srn")), F.lit(0.0))
         ).alias("rrf"),
     )
-    wf = W.partitionBy("query_id").orderBy(F.col("rrf").desc(), "doc_id")
     return (
-        fused.withColumn("frn", F.row_number().over(wf))
-        .filter(F.col("frn") <= _RRF_OUT)
+        top_n(fused, "query_id", _RRF_OUT, F.col("rrf").desc(), "doc_id")
         .select(
             "query_id",
             "doc_id",
@@ -574,8 +543,6 @@ SELECT phrase, doc_id, n FROM (
     tags=("text", "functions"),
 )
 def text_phrase_search_positional(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = spread(table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     postings = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
@@ -600,9 +567,6 @@ def text_phrase_search_positional(spark, sf_dir):
     hits = arms[0]
     for a in arms[1:]:
         hits = hits.unionByName(a)
-    w = W.partitionBy("phrase").orderBy(F.desc("n"), "doc_id")
-    return (
-        hits.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PHRASE_TOP)
-        .select("phrase", "doc_id", "n")
+    return top_n(hits, "phrase", _PHRASE_TOP, F.desc("n"), "doc_id").select(
+        "phrase", "doc_id", "n"
     )

@@ -49,19 +49,13 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import _DOT, spread
 
 _N_COARSE = 16  # fixed coarse centroids: embeddings with vec_id < 16
 _SEM_TARGET = 125  # target mean cluster size
 _MAX_B = 20  # sign-bit budget cap (16 * 2^20 clusters ~ 2e9 vectors)
 _TAU = 0.3  # cosine threshold (dedup_embedding_cosine's fixture value)
 _TAU2 = 0.09  # tau^2, exact decimal literal mirrored in the oracle
-
-_DOT = (
-    "aggregate(zip_with({a}, {b},"
-    " (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
 
 _DOT_DUCK = (
     "list_aggregate(list_transform(list_zip({a}, {b}),"

@@ -12,18 +12,28 @@
 The hyperplanes are +-1 vectors derived from md5 at module import (seeded,
 no RNG state), embedded as literals in both the Spark plan and the oracle
 SQL so the two engines score identical planes.
+
+The ANN family (IVF here, PQ in ``pq.py``, IVFADC in ``ivfpq.py``, BQ in
+``binquant.py``, the hybrid dense arm in ``retrieval.py``) shares one core.
+``_util.py`` holds the vector folds (``_DOT``, ``_D2``) and the per-query
+rank cut (``top_n``). This module holds the cosine pieces: the corpus with
+its norms (``_emb_with_norm``), the brute-force top-n (``_exact_topn``),
+the md5-sampled centroid pick (``_sampled_centroids``), corpus x centroid
+scoring (``_score_cells``), the argmax assignment and probe window
+(``_assign_probe``), the probe-to-top-n tail (``_probe_topn``) and the
+recall@k join (``_recall_at_k``). ``pq.py`` holds the sub-space split,
+codebook, encoder, LUT and ADC rank that ``ivfpq.py`` reuses.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._util import spread
+from ._util import _DOT, spread, top_n
 
 DIM = 64
 N_PLANES = 8
@@ -44,12 +54,6 @@ def _planes() -> list[list[int]]:
 
 
 PLANES = _planes()
-
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
-    " cast(0 as double), (acc, v) -> acc + v)"
-)
-
 
 def _plane_sql_array(p: int) -> str:
     return "[" + ", ".join(f"{v}.0" for v in PLANES[p]) + "]"
@@ -85,47 +89,51 @@ FROM (
 """
 
 
-@register("sim_topk_bruteforce", oracle=_TOPK_ORACLE, tags=("similarity",), bench=True)
-def sim_topk_bruteforce(spark, sf_dir):
-    # norms are precomputed per side, NOT per pair: the higher-order
-    # aggregate lambdas skip whole-stage codegen, so per-pair evaluation
-    # would redo the costliest expression |q| times per corpus row. The
-    # doubles are identical either way (same fold over the same array).
-    # spread: a single-file embeddings table is one scan partition, which
-    # would serialize the q x N scoring map no matter the cluster width
-    e = spread(
-        table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "embedding",
-            F.sqrt(F.expr(_DOT.format(a="embedding", b="embedding"))).alias("nn"),
-        ),
-        "vec_id",
-    )
+def _emb_with_norm(spark, sf_dir, *extra, dims=None):
+    """(vec_id, embedding, vv, *extra): the embeddings with the norm ``vv``
+    computed once per vector, never per scored pair — the higher-order
+    ``aggregate`` lambdas skip whole-stage codegen, so a per-pair norm
+    would redo the costliest expression once per partner (same doubles
+    either way). ``dims`` keeps only the first ``dims`` components, so
+    norms and dots read only those. spread: a single-file table is one
+    scan partition, which would pin every corpus x queries or corpus x
+    centroids product to one task."""
+    e = table(spark, sf_dir, "embeddings")
+    if dims is not None:
+        e = e.select("vec_id", F.slice("embedding", 1, dims).alias("embedding"))
+    norm = F.sqrt(F.expr(_DOT.format(a="embedding", b="embedding")))
+    return spread(e.select("vec_id", "embedding", norm.alias("vv"), *extra), "vec_id")
+
+
+def _exact_topn(e, n, *same):
+    """Brute-force cosine top-``n`` (query_id, neighbor_id, cos rounded to
+    6 digits) of the query batch ``vec_id < N_QUERIES`` over ``e`` from
+    ``_emb_with_norm``: the query side is broadcast, the self-match is
+    dropped, and a candidate must equal its query on every column in
+    ``same`` (the LSH bucket). Ranked on the raw cosine."""
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        F.col("nn").alias("qq"),
+        F.col("vv").alias("qn"),
+        *[F.col(c).alias(f"q_{c}") for c in same],
     )
-    c = e.select(
+    cond = F.col("vec_id") != F.col("query_id")
+    for c in same:
+        cond = (F.col(c) == F.col(f"q_{c}")) & cond
+    dot = F.expr(_DOT.format(a="qe", b="embedding"))
+    scored = e.join(F.broadcast(q), cond).select(
+        "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nn").alias("cc"),
+        (dot / (F.col("qn") * F.col("vv"))).alias("cos"),
     )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qq") * F.col("cc"))).alias("cos"),
-        )
+    return top_n(scored, "query_id", n, F.col("cos").desc(), "neighbor_id").select(
+        "query_id", "neighbor_id", F.round("cos", 6).alias("cos")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+
+
+@register("sim_topk_bruteforce", oracle=_TOPK_ORACLE, tags=("similarity",), bench=True)
+def sim_topk_bruteforce(spark, sf_dir):
+    return _exact_topn(_emb_with_norm(spark, sf_dir), K)
 
 
 # --------------------------------------------------------------------------
@@ -195,45 +203,8 @@ FROM (
 
 @register("sim_ann_lsh_topk", oracle=_ANN_ORACLE, tags=("similarity", "lsh"))
 def sim_ann_lsh_topk(spark, sf_dir):
-    e = spread(
-        table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "embedding",
-            _bucket_col().alias("bucket"),
-            F.sqrt(F.expr(_DOT.format(a="embedding", b="embedding"))).alias("nn"),
-        ),
-        "vec_id",
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("bucket").alias("qb"),
-        F.col("nn").alias("qq"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("bucket").alias("cb"),
-        F.col("nn").alias("cc"),
-    )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("cb") == F.col("qb")) & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qq") * F.col("cc"))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    e = _emb_with_norm(spark, sf_dir, _bucket_col().alias("bucket"))
+    return _exact_topn(e, 3, "bucket")
 
 
 # --------------------------------------------------------------------------
@@ -255,6 +226,7 @@ def sim_ann_lsh_topk(spark, sf_dir):
 # constant stride 37: k grew linearly with the corpus). nprobe stays
 # fixed; probe cost per query is ~nprobe/k of the corpus either way.
 NPROBE = 2
+K_CENT = 32  # the fixed-K sampled quantizer, see sim_ivf_topk
 
 _STRIDE_SQL = "(SELECT cast(floor(sqrt(count(*))) AS BIGINT) FROM embeddings)"
 
@@ -307,30 +279,22 @@ FROM (
 """
 
 
-def _emb_with_norm(spark, sf_dir):
-    """Embeddings with the per-vector norm precomputed ONCE, spread across
-    partitions before any corpus x centroids product (a single-file scan
-    would pin the scoring to one task)."""
-    return spread(
-        table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            "embedding",
-            F.sqrt(F.expr(_DOT.format(a="embedding", b="embedding"))).alias("vv"),
-        ),
-        "vec_id",
+def _score_cells(e, cent):
+    """(vec_id, embedding, vv, cent_id, ccos): every vector of ``e`` (from
+    ``_emb_with_norm``) scored against every centroid of ``cent``
+    (cent_id, cent_e, kk) — corpus x broadcast centroids, no shuffle. Both
+    norms are per-side columns, so ``cdot / (vv * kk)`` evaluates the fold
+    once per pair, and the rounded scores match the oracle bit-for-bit."""
+    cdot = F.expr(_DOT.format(a="embedding", b="cent_e"))
+    ccos = F.round(cdot / (F.col("vv") * F.col("kk")), 6)
+    return e.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "embedding", "vv", "cent_id", ccos.alias("ccos")
     )
 
 
 def _ivf_scored(spark, sf_dir):
-    """(vec_id, embedding, cent_id, ccos): every vector scored vs every
-    centroid — corpus x broadcast-centroids, no shuffle.
-
-    Norms are precomputed per side BEFORE the cross product: the
-    higher-order ``aggregate`` lambdas don't participate in whole-stage
-    codegen, so evaluating them on the n x k product rows (instead of n + k
-    input rows) would redo the most expensive expression k times per
-    vector. Same doubles either way — cdot / (vv * kk) is unchanged — so
-    the rounded scores and the oracle agree bit-for-bit."""
+    """``_score_cells`` against the sqrt(n) quantizer: every stride-th
+    vec_id with stride = floor(sqrt(n))."""
     e = _emb_with_norm(spark, sf_dir)
     stride = table(spark, sf_dir, "embeddings").agg(
         F.floor(F.sqrt(F.count(F.lit(1)))).cast("long").alias("stride")
@@ -344,15 +308,40 @@ def _ivf_scored(spark, sf_dir):
             F.col("vv").alias("kk"),
         )
     )
-    cdot = F.expr(_DOT.format(a="embedding", b="cent_e"))
-    ccos = F.round(cdot / (F.col("vv") * F.col("kk")), 6)
-    return e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "vv", "cent_id", ccos.alias("ccos")
+    return _score_cells(e, cent)
+
+
+def _sampled_centroids(df, *cols):
+    """The fixed-K quantizer's centroids: the K_CENT rows of ``df`` with
+    the smallest (md5(vec_id), vec_id) key, as (cent_id, *cols). A
+    hash-uniform deterministic draw, selected with a bounded top-k
+    (TakeOrderedAndProject, never a full sort of the corpus)."""
+    return (
+        df.select(
+            F.col("vec_id").alias("cent_id"),
+            *cols,
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
+        )
+        .orderBy("h", "cent_id")
+        .limit(K_CENT)
+        .drop("h")
     )
 
 
-def _ivf_parts(spark, sf_dir):
-    """(assign, probe) for the IVF index.
+def _sampled_scored(spark, sf_dir):
+    """``_score_cells`` against the fixed-K sampled quantizer — only the
+    centroid SET differs from ``_ivf_scored``."""
+    e = _emb_with_norm(spark, sf_dir)
+    cent = _sampled_centroids(
+        e, F.col("embedding").alias("cent_e"), F.col("vv").alias("kk")
+    )
+    return _score_cells(e, cent)
+
+
+def _assign_probe(scored):
+    """(assign, probe) of an IVF index over ``scored`` (``_score_cells``):
+    assign = (neighbor_id, ce, cn, cent_id), the inverted lists; probe =
+    (query_id, qe, qn, cent_id), the NPROBE best cells of each query.
 
     Assignment does NOT rank with a window over the corpus x centroids
     product (that would shuffle every score row, embedding included,
@@ -363,10 +352,6 @@ def _ivf_parts(spark, sf_dir):
     aggregate. The probe-side rank window only ever sees the
     ``vec_id < N_QUERIES`` rows (filter pushed below the cross product).
     """
-    return _assign_probe(_ivf_scored(spark, sf_dir))
-
-
-def _assign_probe(scored):
     argmax_key = F.struct(F.col("ccos"), (-F.col("cent_id")).alias("neg_cent"))
     assign = (
         scored.groupBy("vec_id")
@@ -377,49 +362,72 @@ def _assign_probe(scored):
         )
         .select(F.col("vec_id").alias("neighbor_id"), "ce", "cn", "cent_id")
     )
-    wc = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cent_id")
-    probe = (
-        scored.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("vv").alias("qn"),
-            F.col("cent_id"),
-        )
+    probe = top_n(
+        scored.filter(F.col("vec_id") < N_QUERIES),
+        "vec_id",
+        NPROBE,
+        F.col("ccos").desc(),
+        "cent_id",
+        rank="crn",
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("vv").alias("qn"),
+        F.col("cent_id"),
     )
     return assign, probe
 
 
-def _sqrt_ivf_topk(spark, sf_dir):
-    """IVF top-3 with the sqrt(n) coarse quantizer — DEMOTED from the
-    default path in r8 (VERDICT r7 #2): its assignment step is O(n^1.5),
-    measured x42.6 at 100x corpus (BENCH_HISTORY r7), so it survives only
-    as the recall-parity baseline behind ``sim_ivf_recall``. The default
-    ``sim_ivf_topk`` below builds the index with the O(n*K) sampled
-    fixed-K quantizer instead."""
-    assign, probe = _ivf_parts(spark, sf_dir)
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
+def _probe_topn(lists, probe, n, cos_digits=None):
+    """The IVF tail: inverted lists (neighbor_id, ce, cn, cent_id) joined
+    to the broadcast probe (query_id, qe, qn, cent_id), the self-match
+    dropped, the exact cosine, and the top ``n`` per query by (cos DESC,
+    neighbor_id) with the rank in ``rn``. ``cos_digits`` rounds the cosine
+    before it is ranked (for an oracle that ranks the rounded value)."""
+    cos = F.expr(_DOT.format(a="qe", b="ce")) / (F.col("qn") * F.col("cn"))
+    if cos_digits is not None:
+        cos = F.round(cos, cos_digits)
     scored = (
-        assign.join(F.broadcast(probe), "cent_id")
+        lists.join(F.broadcast(probe), "cent_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qn") * F.col("cn"))).alias("cos"),
+        .select("query_id", "neighbor_id", cos.alias("cos"))
+    )
+    return top_n(scored, "query_id", n, F.col("cos").desc(), "neighbor_id")
+
+
+def _ivf_top3(lists, probe):
+    return _probe_topn(lists, probe, 3).select(
+        "query_id", "neighbor_id", F.round("cos", 6).alias("cos")
+    )
+
+
+def _recall_at_k(truth, approx, k):
+    """Per-query recall@k: every (query_id, neighbor_id) row of the exact
+    top-k ``truth`` left-joined to the approximate top-k ``approx``, which
+    is broadcast (both sides are k * |queries| rows, constants). A query
+    whose approximate list misses every true neighbor keeps its row with
+    n_hit 0; approximate rows outside ``truth`` count for nothing; recall
+    is n_hit / k, not n_hit over the rows found."""
+    hits = F.broadcast(
+        approx.select(
+            F.col("query_id").alias("hit_query"), F.col("neighbor_id").alias("hit")
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"))
+    on = (F.col("query_id") == F.col("hit_query")) & (
+        F.col("neighbor_id") == F.col("hit")
+    )
+    joined = truth.join(hits, on, "left")
+    return joined.groupBy("query_id").agg(
+        F.count("hit").alias("n_hit"),
+        F.round(F.count("hit") / F.lit(k).cast("double"), 6).alias("recall"),
     )
 
 
-# NOTE: the default ``sim_ivf_topk`` is registered further down, after
-# the sampled fixed-K quantizer it builds on is defined.
+def _brute_recall3(spark, sf_dir, ivf):
+    """recall@3 of an IVF top-3 against the brute-force top-3."""
+    brute = sim_topk_bruteforce(spark, sf_dir)
+    truth = top_n(brute, "query_id", 3, F.col("cos").desc(), "neighbor_id")
+    return _recall_at_k(truth, ivf, 3)
 
 
 # --------------------------------------------------------------------------
@@ -430,8 +438,8 @@ def _sqrt_ivf_topk(spark, sf_dir):
 # set prunes the scan to ~nprobe/n_centroids of the stored corpus
 # (PartitionFilters: dynamicpruning#... in the plan, asserted by
 # tests/test_plans_perf.py). Same result as the sqrt(n)-quantizer build
-# (_sqrt_ivf_topk), whose oracle it shares — the round-trip through the
-# partitioned store must be lossless. The quantizer choice is orthogonal
+# scored by ``sim_ivf_recall``, whose oracle it shares — the round-trip
+# through the partitioned store must be lossless. The quantizer choice is orthogonal
 # to the persist/DPP mechanics this query demonstrates; the default
 # index build is the sampled fixed-K one in ``sim_ivf_topk``.
 # --------------------------------------------------------------------------
@@ -441,38 +449,13 @@ def _sqrt_ivf_topk(spark, sf_dir):
 def sim_ivf_persisted(spark, sf_dir):
     from .file_formats import _scratch
 
-    assign, probe = _ivf_parts(spark, sf_dir)
+    assign, probe = _assign_probe(_ivf_scored(spark, sf_dir))
     out = _scratch("ivf", sf_dir)
-    (
-        assign.select(
-            "neighbor_id", F.col("ce").alias("embedding"), "cn", "cent_id"
-        )
-        .write.mode("overwrite")
-        .partitionBy("cent_id")
-        .parquet(str(out))
-    )
+    assign.write.mode("overwrite").partitionBy("cent_id").parquet(str(out))
     lists = spark.read.parquet(str(out)).select(
-        "neighbor_id",
-        F.col("embedding").alias("ce"),
-        "cn",
-        F.col("cent_id").cast("long")
+        "neighbor_id", "ce", "cn", F.col("cent_id").cast("long")
     )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        lists.join(F.broadcast(probe), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qn") * F.col("cn"))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
+    return _ivf_top3(lists, probe)
 
 
 # --------------------------------------------------------------------------
@@ -506,32 +489,13 @@ GROUP BY br3.query_id
 @register("sim_ivf_recall", oracle=_RECALL_ORACLE, tags=("similarity", "ivf", "eval"))
 def sim_ivf_recall(spark, sf_dir):
     # Recall-parity baseline: this eval deliberately scores the DEMOTED
-    # sqrt(n)-quantizer index so that, side by side with
+    # sqrt(n)-quantizer index (its O(n^1.5) assignment measured x42.6 at
+    # 100x corpus, BENCH_HISTORY r7) so that, side by side with
     # ``sim_ivf_sampled_quantizer`` (same metric over the default sampled
     # index), the registry carries standing proof the O(n*K) build
     # matches the sqrt(n) build's recall@3.
-    ivf = _sqrt_ivf_topk(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-    )
-    brute = sim_topk_bruteforce(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    br3 = (
-        brute.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    joined = br3.join(
-        ivf,
-        (br3.query_id == ivf.query_id)
-        & (br3.neighbor_id == ivf.ivf_neighbor),
-        "left",
-    ).select(br3.query_id, "ivf_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("ivf_neighbor").alias("n_hit"),
-        F.round(
-            F.count("ivf_neighbor") / F.lit(3).cast("double"), 6
-        ).alias("recall"),
-    )
+    ivf = _ivf_top3(*_assign_probe(_ivf_scored(spark, sf_dir)))
+    return _brute_recall3(spark, sf_dir, ivf)
 
 
 # --------------------------------------------------------------------------
@@ -601,7 +565,7 @@ def dedup_semantic_clusters(spark, sf_dir):
     """SemDeDup composite: per-cluster member/drop counts + an exact
     checksum of the kept vec_ids, reusing the IVF assignment (sqrt(n)
     centroids, map-side argmax)."""
-    assign, _ = _ivf_parts(spark, sf_dir)
+    assign, _ = _assign_probe(_ivf_scored(spark, sf_dir))
     members = assign.select(
         F.col("neighbor_id").alias("vec_id"), "ce", "cn", "cent_id"
     )
@@ -652,8 +616,6 @@ def dedup_semantic_clusters(spark, sf_dir):
 # ground truth, so one driver row proves both the index round-trip and
 # that the fixed-k quantizer's quality holds.
 # --------------------------------------------------------------------------
-
-K_CENT = 32
 
 _SAMPLED_IVF_SQL = f"""
 WITH v AS (
@@ -724,48 +686,6 @@ GROUP BY br3.query_id
 """
 
 
-def _sampled_scored(spark, sf_dir):
-    """Corpus x broadcast fixed-K sampled centroids, same rounding/tie
-    rules as ``_ivf_scored`` — only the centroid SET differs."""
-    e = _emb_with_norm(spark, sf_dir)
-    cent = (
-        e.select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent_e"),
-            F.col("vv").alias("kk"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "cent_id")
-        .limit(K_CENT)
-        .drop("h")
-    )
-    cdot = F.expr(_DOT.format(a="embedding", b="cent_e"))
-    ccos = F.round(cdot / (F.col("vv") * F.col("kk")), 6)
-    return e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "embedding", "vv", "cent_id", ccos.alias("ccos")
-    )
-
-
-def _sampled_ivf_topk(spark, sf_dir):
-    assign, probe = _assign_probe(_sampled_scored(spark, sf_dir))
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        assign.join(F.broadcast(probe), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qn") * F.col("cn"))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
-
-
 @register(
     "sim_ivf_topk",
     oracle=_SAMPLED_IVF_SQL,
@@ -781,7 +701,7 @@ def sim_ivf_topk(spark, sf_dir):
     (BENCH_HISTORY r7), and ``sim_ivf_sampled_quantizer`` is the standing
     recall@3 proof for this exact index. Oracle: the sampled-quantizer
     IVF SQL, switched in lockstep with the build."""
-    return _sampled_ivf_topk(spark, sf_dir)
+    return _ivf_top3(*_assign_probe(_sampled_scored(spark, sf_dir)))
 
 
 @register(
@@ -793,30 +713,7 @@ def sim_ivf_topk(spark, sf_dir):
 def sim_ivf_sampled_quantizer(spark, sf_dir):
     # both sides of the recall join are bounded by 3 * N_QUERIES rows
     # (constants, independent of corpus size) — broadcast, never SMJ
-    ivf = F.broadcast(
-        _sampled_ivf_topk(spark, sf_dir).select(
-            "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-        )
-    )
-    brute = sim_topk_bruteforce(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    br3 = (
-        brute.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    joined = br3.join(
-        ivf,
-        (br3.query_id == ivf.query_id)
-        & (br3.neighbor_id == ivf.ivf_neighbor),
-        "left",
-    ).select(br3.query_id, "ivf_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("ivf_neighbor").alias("n_hit"),
-        F.round(
-            F.count("ivf_neighbor") / F.lit(3).cast("double"), 6
-        ).alias("recall"),
-    )
+    return _brute_recall3(spark, sf_dir, sim_ivf_topk(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -870,50 +767,8 @@ def ml_embedding_truncate_recall(spark, sf_dir):
     # truncated corpus scan: slice FIRST, so norms and dot products read
     # 16 components — the whole point is that the scan/score cost drops
     # with the dimension cut
-    e = spread(
-        table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.slice("embedding", 1, _TRUNC_DIM).alias("te")
-        ),
-        "vec_id",
-    ).withColumn("tn", F.sqrt(F.expr(_DOT.format(a="te", b="te"))))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("te").alias("qe"),
-        F.col("tn").alias("qq"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("te").alias("ce"),
-        F.col("tn").alias("cc"),
-    )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    tr = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / (F.col("qq") * F.col("cc"))).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= K)
-        .select("query_id", F.col("neighbor_id").alias("tr_neighbor"))
-    )
-    brK = (
-        sim_topk_bruteforce(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-    )
-    joined = brK.join(
-        F.broadcast(tr),
-        (brK.query_id == tr.query_id) & (brK.neighbor_id == tr.tr_neighbor),
-        "left",
-    ).select(brK.query_id, "tr_neighbor")
-    return joined.groupBy("query_id").agg(
-        F.count("tr_neighbor").alias("n_hit"),
-        F.round(
-            F.count("tr_neighbor") / F.lit(K).cast("double"), 6
-        ).alias("recall"),
-    )
+    approx = _exact_topn(_emb_with_norm(spark, sf_dir, dims=_TRUNC_DIM), K)
+    return _recall_at_k(sim_topk_bruteforce(spark, sf_dir), approx, K)
 
 
 # --------------------------------------------------------------------------
@@ -986,71 +841,23 @@ def sim_ivf_incremental_append(spark, sf_dir):
     base = e.filter(F.col("vec_id") % 10 != 7)
     delta = e.filter(F.col("vec_id") % 10 == 7)
     # frozen quantizer: trained on the BASE corpus only
-    cent = (
-        base.select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("cent_e"),
-            F.col("vv").alias("kk"),
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "cent_id")
-        .limit(K_CENT)
-        .drop("h")
+    cent = _sampled_centroids(
+        base, F.col("embedding").alias("cent_e"), F.col("vv").alias("kk")
     )
-    cdot = F.expr(_DOT.format(a="embedding", b="cent_e"))
-    ccos = F.round(cdot / (F.col("vv") * F.col("kk")), 6)
-    argmax_key = F.struct(F.col("ccos"), (-F.col("cent_id")).alias("neg_cent"))
-
-    def assigned(part):
-        return (
-            part.crossJoin(F.broadcast(cent))
-            .select("vec_id", "embedding", "vv", "cent_id", ccos.alias("ccos"))
-            .groupBy("vec_id")
-            .agg(
-                F.max_by("cent_id", argmax_key).alias("cent_id"),
-                F.any_value("embedding").alias("ce"),
-                F.any_value("vv").alias("cn"),
-            )
-            .select(F.col("vec_id").alias("neighbor_id"), "ce", "cn", "cent_id")
-        )
-
     out = _scratch("ivf_inc", sf_dir)
-    assigned(base).write.mode("overwrite").partitionBy("cent_id").parquet(str(out))
-    # the incremental step: only the delta's rows move, same layout
-    assigned(delta).write.mode("append").partitionBy("cent_id").parquet(str(out))
-
+    # the base build, then the incremental step: only the delta's rows
+    # move, into the same layout
+    for part, mode in ((base, "overwrite"), (delta, "append")):
+        assign, _ = _assign_probe(_score_cells(part, cent))
+        assign.write.mode(mode).partitionBy("cent_id").parquet(str(out))
     lists = spark.read.parquet(str(out)).select(
-        "neighbor_id", F.col("ce"), "cn", F.col("cent_id").cast("long")
+        "neighbor_id", "ce", "cn", F.col("cent_id").cast("long")
     )
     # probe with the same frozen centroids
-    q = e.filter(F.col("vec_id") < N_QUERIES)
-    wq = W.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cent_id")
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .select("vec_id", "embedding", "vv", "cent_id", ccos.alias("ccos"))
-        .withColumn("crn", F.row_number().over(wq))
-        .filter(F.col("crn") <= NPROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("vv").alias("qn"),
-            "cent_id",
-        )
-    )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        lists.join(F.broadcast(probe), "cent_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot / (F.col("qn") * F.col("cn")), 6).alias("cos"),
-            (F.col("neighbor_id") % 10 == 7).cast("int").alias("from_delta"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id", "cos", "from_delta")
+    _, probe = _assign_probe(_score_cells(e, cent))
+    return _probe_topn(lists, probe, 3, cos_digits=6).select(
+        "query_id",
+        "neighbor_id",
+        "cos",
+        (F.col("neighbor_id") % 10 == 7).cast("int").alias("from_delta"),
     )

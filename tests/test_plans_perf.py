@@ -526,24 +526,52 @@ def test_kn_ladder_plan_shape(spark, sf_dir):
         assert ops["Sort"] <= n, (name, ops)
 
 
+def _jobs_in_group(spark, group, run) -> int:
+    """Jobs that ``run()`` starts, counted under its own job group (a
+    query's build-time actions included)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_seeded_louvain_job_budget(spark, sf_dir):
     """The one-sweep Louvain views run on the seeded core's driver-side
     community state: a stats job, one job per sweep, a coarsen job and a
     local output. A per-sweep join pipeline (adjacency x assignment,
     broadcast community tables, checkpoints) costs ~3x the jobs."""
-    sc = spark.sparkContext
     for name, budget in (
         ("graph_louvain_pass", 15),
         ("graph_louvain_coarsen", 10),
     ):
-        group = f"job-budget-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            SPECS[name].fn(spark, sf_dir).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = _jobs_in_group(
+            spark,
+            f"job-budget-{name}",
+            lambda: SPECS[name].fn(spark, sf_dir).collect(),  # noqa: B023
+        )
+        assert jobs <= budget, (name, jobs)
+
+
+def test_ann_headliner_job_budget(spark, sf_dir):
+    """The five ANN headliners run on the shared centroid / probe / rank /
+    recall core at the job counts their hand-written copies had. A copy
+    that collects a side table, or one more action per query, fails."""
+    for name, budget in (
+        ("sim_ivf_topk", 8),
+        ("sim_ivf_sampled_quantizer", 12),
+        ("sim_pq_adc_topk", 11),
+        ("sim_ivfpq_adc_topk", 15),
+        ("text_hybrid_rrf_topk", 19),
+    ):
+        jobs = _jobs_in_group(
+            spark,
+            f"job-budget-{name}",
+            lambda: SPECS[name].fn(spark, sf_dir).collect(),  # noqa: B023
+        )
         assert jobs <= budget, (name, jobs)
 
 

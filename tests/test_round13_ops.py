@@ -417,6 +417,37 @@ def test_binary_quant_topk_shape_and_recall_bounds(spark, sf_dir):
         assert abs(r.recall - r.n_hit / K) < 1e-9
 
 
+def test_recall_at_k_hand_fixture(spark):
+    """The recall@k join every ANN eval shares: query 1's approximate
+    rows all miss the truth and query 3 has no approximate rows, so both
+    keep their row with n_hit 0 and recall 0.0; query 0's extra
+    approximate row (9) is outside the truth and does not count; and
+    recall divides by k = 3, not by the hits (1.0) or the approximate
+    rows found (0.5)."""
+    from open_molecule_data_pipeline_spark.operators.similarity import (
+        _recall_at_k,
+    )
+
+    schema = "query_id long, neighbor_id long"
+    truth = spark.createDataFrame(
+        [(q, q * 10 + j) for q in (0, 1, 2, 3) for j in (1, 2, 3)], schema
+    )
+    approx = spark.createDataFrame(
+        [(0, 1), (0, 9), (1, 17), (1, 18), (1, 19), (2, 21), (2, 23), (2, 29)],
+        schema,
+    )
+    got = {
+        r.query_id: (r.n_hit, r.recall)
+        for r in _recall_at_k(truth, approx, 3).collect()
+    }
+    assert got == {
+        0: (1, 0.333333),
+        1: (0, 0.0),
+        2: (2, 0.666667),
+        3: (0, 0.0),
+    }
+
+
 def test_louvain_coarsen_conserves_edges(spark, sf_dir):
     """Coarsening telescopes: total super-edge weight equals the
     original undirected edge count m, and every returned row carries
